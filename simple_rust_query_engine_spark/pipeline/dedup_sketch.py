@@ -202,13 +202,14 @@ def _widen_docs(docs: DataFrame, min_tasks: int | None) -> DataFrame:
     sort-before-repartition — see ``_checkpointed_sigs``); otherwise
     leave the plan untouched.  The byte count comes from driver-side
     file metadata — no counting job, so the per-batch streaming
-    ingest can use the dial for free; an unresolvable input skips
-    the floor and widens to ``min_tasks``."""
+    ingest can use the dial for free; a 0-byte input stays at one
+    task, and only an unresolvable input skips the floor and widens
+    to ``min_tasks``."""
     if min_tasks is None:
         return docs
     width = int(min_tasks)
     total = _input_bytes(docs)
-    if total:
+    if total is not None:
         width = min(width, max(1, -(-total // MIN_BYTES_PER_SIG_TASK)))
     if docs.rdd.getNumPartitions() < width:
         return docs.repartition(width, F.col("doc_id"))

@@ -765,7 +765,7 @@ def test_ngram_candidate_aggregation_matches_row_filtered_distinct(tables):
     assert cand_set == ref_set and len(cand_set) > 0
 
 
-def test_minhash_sig_dial_identical_output_and_width(tables, spark):
+def test_minhash_sig_dial_identical_output_and_width(tables, spark, tmp_path):
     # r14 (guide §2.6): the signature-kernel dial must leave the pair
     # set bit-identical (signatures are per-row) and actually widen
     # the checkpointed table, bounded by the docs-per-task floor
@@ -793,6 +793,14 @@ def test_minhash_sig_dial_identical_output_and_width(tables, spark):
         assert got == expect, (got, expect)
     else:
         assert got == scan_parts, (got, scan_parts)
+    # a resolvable 0-byte input keeps the bytes-per-task floor (one
+    # task) instead of widening to the full min_tasks
+    empty_file = tmp_path / "empty.parquet"
+    empty_file.touch()
+    empty = spark.read.schema(docs.schema).parquet(str(empty_file))
+    assert _input_bytes(empty) == 0
+    got = _checkpointed_sigs(empty, min_tasks=8).rdd.getNumPartitions()
+    assert got <= 1, got
 
 
 def test_ppjoin_candidate_estimate_bounds_actual(tables):
