@@ -72,7 +72,9 @@ _DRIVER_CAP = 50
 #: lead the checked window.  Add a row when its builder changes and
 #: empty the tuple at round close.
 _CHANGED = (
-    # _widen_docs keeps the bytes-per-task floor for 0-byte inputs
+    # _widen_docs keeps the bytes-per-task floor for 0-byte inputs;
+    # the two stream rows also write their band index and label state
+    # as plain (unbucketed) tables
     "dedup_minhash",
     "dedup_minhash_ingest_stream",
     "dedup_labels_stream",

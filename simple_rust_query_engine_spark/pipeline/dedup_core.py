@@ -99,8 +99,10 @@ def _fallback_checkpoint_dir() -> str:
         atexit.register(shutil.rmtree, _FALLBACK_CK_DIR, True)
     return _FALLBACK_CK_DIR
 # ------------------------------------------- persisted band index
-#: bucket count for the persisted band index — matches the session's
-#: shuffle partitions so a bucketed scan feeds every core
+#: bucket count for the batch band index (``build_band_index``) and
+#: the ``_state_table`` state tables, whose band self-join and
+#: doc_id joins read the bucket layout shuffle-free.  The per-batch
+#: ingest loops write plain tables and do not use it.
 BAND_BUCKETS = 32
 
 _STATE_TBL_DIR: str | None = None

@@ -11,7 +11,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup_core import BAND_BUCKETS, _state_table, materialize
+from ..session import persistent_rdds
+from .dedup_core import _state_table, materialize
 from .dedup_sketch import (
     INCR_MOD,
     MH_K,
@@ -137,24 +138,26 @@ def _mh_old_label_state_for(
 
 def commit_label_state(
     spark, labels: DataFrame, table: str, path: str,
-    num_buckets: int = BAND_BUCKETS,
     barrier: bool = True,
 ) -> None:
     """Overwrite the persisted label state with merged labels — the
-    COMMIT step of the ingest cycle.  The merged frame is hard-
-    materialized first (``merge_labels`` output already truncates
-    lineage at the CC loop, but the final vertex join is lazy): a
-    plan still referencing the table being overwritten would read
-    files the overwrite is deleting.  ``barrier=False`` skips that
+    COMMIT step of the ingest cycle.  ``table`` is a plain parquet
+    table at ``path`` holding exactly the current (doc_id, label)
+    rows, so its scan is split by bytes like any file read; nothing
+    reading it needs a bucket layout (the fold's anti-join broadcasts
+    the batch).  The merged frame is hard-materialized first
+    (``merge_labels`` output already truncates lineage at the CC
+    loop, but the final vertex join is lazy): a plan still
+    referencing the table being overwritten would read files the
+    overwrite is deleting.  ``barrier=False`` skips that
     materialization — ONLY valid when the caller can prove the plan
     never reads ``table`` (the first batch of a stream, where the
-    state table does not exist yet)."""
-    from ..sources.write import write_bucketed
-
-    write_bucketed(
-        materialize(labels) if barrier else labels, table, path,
-        bucket_by=["doc_id"], num_buckets=num_buckets,
-    )
+    state table does not exist yet).  The table is refreshed on
+    ``spark``, the session the next batch reads the state through."""
+    (materialize(labels) if barrier else labels).write.mode(
+        "overwrite"
+    ).option("path", path).saveAsTable(table)
+    spark.catalog.refreshTable(table)
 
 
 def fold_edges_into_labels(
@@ -190,7 +193,7 @@ def fold_edges_into_labels(
         # first batch (r14): no empty-table bootstrap commit — the
         # state IS the arriving identity labels, and the final commit
         # below creates the table.  Saves one materialize + one
-        # bucketed write per stream; the replay-idempotence contract
+        # table write per stream; the replay-idempotence contract
         # is untouched (a replayed FIRST batch still anti-joins
         # against the by-then-existing table on the branch above).
         labels0 = arriving_docs.select(
@@ -223,7 +226,8 @@ def ingest_docs_batch(
     input persisted state:
 
     1. band rows for the batch computed map-only (Arrow signature
-       UDF over the BATCH only) and APPENDED to the bucketed index;
+       UDF over the BATCH only) and APPENDED to the index, a plain
+       parquet table (one file per band-checkpoint partition);
     2. the index PROBED with those same rows (batch broadcast, corpus
        never shuffled) — because the append precedes the probe, the
        batch sees itself plus everything earlier, so each new pair
@@ -249,31 +253,22 @@ def ingest_docs_batch(
     exclusive-session assumption, as ``stream_minhash_ingest``; a
     caller running concurrent barrier-creating queries passes
     ``release_batch_barriers=False`` and manages blocks itself)."""
-    from ..sources.write import write_bucketed
-
-    def _persistent_rdds(sc) -> dict:
-        out = {}
-        it = sc._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            t = it.next()
-            out[t._1()] = t._2()
-        return out
-
     sc = spark.sparkContext
-    live_before = set(_persistent_rdds(sc)) if release_batch_barriers else ()
+    live_before = set(persistent_rdds(sc)) if release_batch_barriers else ()
     # one barrier per batch (r14): sign → filter → band-explode →
     # checkpoint in a single job; the separate signature checkpoint
     # fed nothing but the explode here (see _checkpointed_bands)
     bands = _checkpointed_bands(batch_docs)
-    write_bucketed(
-        bands.repartition(BAND_BUCKETS, F.col("band")),
-        index_table, index_path,
-        bucket_by=["band"], num_buckets=BAND_BUCKETS, mode="append",
+    bands.write.mode("append").option("path", index_path).saveAsTable(
+        index_table
     )
+    # a probe holding the cached relation would read the PRE-append
+    # file listing and miss every pair involving this batch
+    spark.catalog.refreshTable(index_table)
     pairs = probe_band_index(spark, index_table, new_bands=bands)
     fold_edges_into_labels(spark, batch_docs, pairs, label_table, label_path)
     if release_batch_barriers:
-        for rid, rdd in _persistent_rdds(sc).items():
+        for rid, rdd in persistent_rdds(sc).items():
             if rid not in live_before:
                 rdd.unpersist(False)
     return spark.table(label_table)

@@ -382,11 +382,12 @@ def minhash_lsh_pairs_incremental(
     O(new × collisions) and produces exactly the pairs the full join
     would add.  This is the FROM-SCRATCH form (recomputes signatures
     per call — the standalone-query contract); the production path
-    persists the band table bucketed on the band key and probes it
-    shuffle-free: ``build_band_index`` / ``probe_band_index`` batch,
-    ``streaming.dedup.stream_minhash_ingest`` continuous.  Output
-    pairs are normalized (doc_a < doc_b) so a pair arriving from
-    either orientation dedups to one row."""
+    persists the band table and probes it with the batch broadcast,
+    never shuffling the index: ``build_band_index`` /
+    ``probe_band_index`` batch,
+    ``streaming.dedup.stream_minhash_ingest`` continuous.  Output pairs
+    are normalized (doc_a < doc_b) so a pair arriving from either
+    orientation dedups to one row."""
     sigs = _checkpointed_sigs(docs, strong_hash=strong_hash)
     bands = _band_exploded(sigs)
     new_bands = bands.filter(is_new(F.col("doc_id")))
@@ -495,12 +496,15 @@ def probe_band_index(
     """O(batch) ingest probe: the new batch's bands are computed
     map-only (Arrow signature UDF, no shuffle) and BROADCAST against
     the persisted index — the corpus-sized side is never shuffled and
-    never recomputed.  After probing, append the batch's band rows to
-    the index (`write_bucketed` mode="append") to complete the ingest
-    cycle.  Emits normalized (doc_a < doc_b) pairs with signature
-    stats, including batch-internal pairs when the batch collides
-    with itself through the index (the driver demo indexes the full
-    corpus, so batch×batch pairs surface through the index side).
+    never recomputed.  The index may be the bucketed batch index
+    (``build_band_index``) or the plain table the ingest loops append
+    to; the broadcast join needs no layout from either.  The ingest
+    loops append the batch's band rows to the index BEFORE probing, so
+    a batch sees itself plus everything earlier.  Emits normalized
+    (doc_a < doc_b) pairs with signature stats, including
+    batch-internal pairs when the batch collides with itself through
+    the index (the driver demo indexes the full corpus, so
+    batch×batch pairs surface through the index side).
 
     Pass ``new_bands`` (a (doc_id, band, sig) frame, e.g. the one just
     appended to the index) to skip recomputing the batch signatures —

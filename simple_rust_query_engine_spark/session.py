@@ -305,14 +305,24 @@ def release_barriers(spark: SparkSession) -> int:
     (``spark.cleaner.referenceTracking.cleanCheckpoints``)."""
     for clear in _BARRIER_CACHE_CLEARERS:
         clear()
-    sc = spark.sparkContext
-    jrdds = sc._jsc.sc().getPersistentRDDs()
-    n = jrdds.size()
-    it = jrdds.values().iterator()
-    while it.hasNext():
-        it.next().unpersist(False)
+    rdds = persistent_rdds(spark.sparkContext)
+    for rdd in rdds.values():
+        rdd.unpersist(False)
     spark.catalog.clearCache()
-    return n
+    return len(rdds)
+
+
+def persistent_rdds(sc) -> dict:
+    """The context's persistent RDDs (localCheckpoint barriers
+    included) as {rdd id: JVM RDD}.  The per-batch ingest loops
+    snapshot the ids before a batch and unpersist the ones that
+    appeared during it once its commit lands."""
+    out = {}
+    it = sc._jsc.sc().getPersistentRDDs().iterator()
+    while it.hasNext():
+        t = it.next()
+        out[t._1()] = t._2()
+    return out
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

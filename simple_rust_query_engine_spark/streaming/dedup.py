@@ -274,13 +274,15 @@ def stream_minhash_ingest(
     min_tasks: int | None = None,
 ):
     """Continuous LSH near-dup ingest THROUGH the streaming engine —
-    the streaming twin of the persisted bucketed band index
+    the streaming twin of the persisted band index
     (``pipeline.dedup.build_band_index``): per micro-batch of
     documents, ``foreachBatch``
 
     1. computes the batch's band rows map-only (Arrow signature UDF
        over the BATCH only — paid exactly once per batch),
-    2. APPENDS them to the bucketed-on-band index table, then
+    2. APPENDS them to the index table, a plain parquet table (the
+       probe broadcasts the batch, so no bucket layout is needed and
+       a batch writes one file per band-checkpoint partition), then
     3. PROBES the index with those same band rows (batch broadcast,
        index never shuffled) and appends the resulting pairs to
        ``pairs_table``.
@@ -293,7 +295,7 @@ def stream_minhash_ingest(
     far (pinned multi-batch by
     ``tests/test_streaming_multibatch.py::test_stream_minhash_ingest_accumulates_full_pairs``).
     This is the 100 TB ingest steady state: per batch, one map-only
-    UDF pass over the batch, one bucketed append, one broadcast
+    UDF pass over the batch, one plain append, one broadcast
     probe; the corpus-sized index is never recomputed or reshuffled.
 
     Failure semantics — foreachBatch is AT-LEAST-ONCE, and the two
@@ -338,13 +340,12 @@ def stream_minhash_ingest(
     if label_table is not None and label_path is None:
         raise ValueError("stream_minhash_ingest: label_table needs label_path")
     from ..pipeline.dedup import (
-        BAND_BUCKETS,
         _checkpointed_bands,
         fold_edges_into_labels,
         materialize,
         probe_band_index,
     )
-    from ..sources.write import write_bucketed
+    from ..session import persistent_rdds
     from .source import file_stream
 
     src = file_stream(
@@ -355,38 +356,25 @@ def stream_minhash_ingest(
         max_files_per_trigger=max_files_per_trigger,
     )
 
-    def _persistent_rdds(sc) -> dict:
-        out = {}
-        it = sc._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            t = it.next()
-            out[t._1()] = t._2()
-        return out
-
     def ingest(batch_df, batch_id):
         sc = spark.sparkContext
-        live_before = set(_persistent_rdds(sc)) if release_batch_barriers else ()
+        live_before = set(persistent_rdds(sc)) if release_batch_barriers else ()
         # one barrier per batch (r14): sign → filter → band-explode →
         # checkpoint in a single job (see _checkpointed_bands); the
         # min_tasks dial widens the compute-bound signature kernel
         # when a batch arrives as fewer splits than the session has
         # cores (no-op at scale — same dial as the batch rows)
         bands = _checkpointed_bands(batch_df, min_tasks=min_tasks)
-        write_bucketed(
-            bands.repartition(BAND_BUCKETS, F.col("band")),
-            index_table,
-            index_path,
-            bucket_by=["band"],
-            num_buckets=BAND_BUCKETS,
-            mode="append",
+        bands.write.mode("append").option("path", index_path).saveAsTable(
+            index_table
         )
-        # refresh on THE PROBING SESSION: write_bucketed refreshes the
+        # refresh on THE PROBING SESSION: the append refreshes the
         # writer's session, but inside foreachBatch the batch frame is
         # bound to an isolated micro-batch session clone — the outer
         # session's cached file listing survives its refresh, and the
         # probe would read the PRE-append index and silently miss
         # every pair involving this batch (caught by the multi-batch
-        # test, which failed under either refresh alone)
+        # test)
         spark.catalog.refreshTable(index_table)
         pairs = probe_band_index(spark, index_table, new_bands=bands)
         if label_table is not None:
@@ -407,7 +395,7 @@ def stream_minhash_ingest(
         # release their blocks so state stays bounded across batches
         # (exclusive-session mode only — see release_batch_barriers)
         if release_batch_barriers:
-            for rid, rdd in _persistent_rdds(sc).items():
+            for rid, rdd in persistent_rdds(sc).items():
                 if rid not in live_before:
                     rdd.unpersist(False)
 

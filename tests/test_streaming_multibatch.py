@@ -238,9 +238,9 @@ def test_stream_minhash_ingest_accumulates_full_pairs(
 ):
     # the continuous-ingest claim, exercised for real: documents split
     # into 3 files, replayed one file per trigger; each batch appends
-    # its bands to the bucketed index and probes it; the accumulated
-    # pair table must equal the from-scratch pair set EXACTLY (each
-    # unordered pair surfaces once, in its later member's batch)
+    # its bands to the index and probes it; the accumulated pair table
+    # must equal the from-scratch pair set EXACTLY (each unordered
+    # pair surfaces once, in its later member's batch)
     from simple_rust_query_engine_spark.pipeline.dedup import (
         minhash_lsh_pairs,
     )
@@ -278,6 +278,20 @@ def test_stream_minhash_ingest_accumulates_full_pairs(
         want = minhash_lsh_pairs(tables["documents"])
         assert got.exceptAll(want).count() == 0
         assert want.exceptAll(got).count() == 0
+        # the index is a plain table: no bucket spec, and each batch
+        # wrote at most one file per partition of its band checkpoint
+        # (one per split of its input file), not one per bucket
+        info = spark.sql("DESCRIBE TABLE EXTENDED t_ingest_idx").collect()
+        assert not [r for r in info if r.col_name == "Num Buckets"], info
+        splits = sum(
+            spark.read.parquet(str(out / f"documents-{i}.parquet"))
+            .rdd.getNumPartitions()
+            for i in range(3)
+        )
+        data_files = [
+            f for f in os.listdir(idx_dir / "idx") if f.endswith(".parquet")
+        ]
+        assert 0 < len(data_files) <= splits, (len(data_files), splits)
     finally:
         spark.sql("DROP TABLE IF EXISTS t_ingest_idx")
         spark.sql("DROP TABLE IF EXISTS t_ingest_pairs")
@@ -396,10 +410,14 @@ def test_stream_minhash_ingest_shared_session_keeps_foreign_barriers(
 def test_stream_label_maintenance_matches_from_scratch(
     spark, tmp_path_factory, tables
 ):
-    # continuous label maintenance across 3 chronological batches:
-    # after the stream drains, the committed label state must equal
-    # from-scratch minhash-edged CC over the full corpus — the
-    # streaming counterpart of the committed batch-loop test
+    # continuous label maintenance across 3 chronological batches plus
+    # one batch of documents shorter than SHINGLE_N tokens (no
+    # signature, so ZERO band rows: an empty append and probe): after
+    # the stream drains, the committed label state must equal
+    # from-scratch minhash-edged CC over every document ingested, the
+    # short ones as identity labels — the streaming counterpart of the
+    # committed batch-loop test
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     from simple_rust_query_engine_spark.pipeline import dedup as D
@@ -416,6 +434,23 @@ def test_stream_label_maintenance_matches_from_scratch(
         pq.write_table(t.slice(cuts[i], cuts[i + 1] - cuts[i]), path)
         stamp = 1_700_000_000 + i * 60
         os.utime(path, (stamp, stamp))
+    # replayed between the first and second corpus batches
+    texts = [" ".join(["tok"] * k) for k in range(D.SHINGLE_N)]
+    top = pc.max(t["doc_id"]).as_py()
+    short_ids = [top + 1 + k for k in range(len(texts))]
+    short = pa.table(
+        {
+            "doc_id": short_ids,
+            "text": texts,
+            "lang": ["en"] * len(texts),
+            "source": ["web"] * len(texts),
+            "n_chars": [len(x) for x in texts],
+        },
+        schema=t.schema,
+    )
+    path = str(out / "documents-short.parquet")
+    pq.write_table(short, path)
+    os.utime(path, (1_700_000_030, 1_700_000_030))
 
     run = tmp_path_factory.mktemp("labels_state")
     q = stream_minhash_ingest(
@@ -434,15 +469,16 @@ def test_stream_label_maintenance_matches_from_scratch(
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     q.stop()
     try:
-        assert n_batches >= 3
+        assert n_batches >= 4
         edges = (
             D.minhash_lsh_pairs(tables["documents"])
             .filter(F.col("n_match") >= D.MH_DUP_NM)
             .select("doc_a", "doc_b")
         )
-        want = D.connected_components(
-            edges, tables["documents"].select("doc_id")
+        vertices = tables["documents"].select("doc_id").union(
+            spark.createDataFrame([(i,) for i in short_ids], "doc_id long")
         )
+        want = D.connected_components(edges, vertices)
         got = {(r.doc_id, r.label) for r in spark.table("t_lbl_state").collect()}
         exp = {(r.doc_id, r.label) for r in want.collect()}
         assert got == exp
