@@ -72,12 +72,23 @@ _DRIVER_CAP = 50
 #: lead the checked window.  Add a row when its builder changes and
 #: empty the tuple at round close.
 _CHANGED = (
-    # _widen_docs keeps the bytes-per-task floor for 0-byte inputs;
-    # the two stream rows also write their band index and label state
-    # as plain (unbucketed) tables
+    # the stream rows write their band index and label state as plain
+    # (unbucketed) tables; every row here sizes its k-NN probe or
+    # minhash docs side with session.size_to_input
     "dedup_minhash",
     "dedup_minhash_ingest_stream",
     "dedup_labels_stream",
+    "dedup_minhash_bucketed",
+    "dedup_minhash_incr",
+    "dedup_text_auto",
+    "decontaminate_fuzzy",
+    "pipeline_clean_incr",
+    "knn_join",
+    "knn_join_twophase",
+    "knn_label_spread",
+    "knn_recall_ivf",
+    "knn_recall_ivf_probe",
+    "knn_recall_ivf_pq",
 )
 
 _ROOT = os.path.dirname(os.path.abspath(__file__))

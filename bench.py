@@ -525,13 +525,15 @@ def main() -> None:
             print(f"# warmup {warm} failed: {exc}", file=sys.stderr)
     # ... at the session's FULL width (r14 measurement fix, guide §1):
     # the two warmup queries read single-split inputs, so they fork
-    # exactly ONE Python worker — the first 32-task Arrow stage then
-    # paid ~31 worker forks + numpy/pandas imports inside its TIMED
-    # cold pass (measured: knn_join cold 10-15 s with the r13
-    # min_tasks dial vs ~2 s once workers exist; the dial itself only
-    # widens the kernel).  Worker fork was always declared warmup
-    # cost (the comment above, r4) — this makes the warmup actually
-    # pay it for every worker the session can run.  Timed regions,
+    # exactly ONE Python worker — the first widened Arrow stage then
+    # paid a worker fork + numpy/pandas import per task inside its
+    # TIMED cold pass (measured at 32 cores: knn_join cold 10-15 s vs
+    # ~2 s once workers exist; widening itself, now the data-driven
+    # session.size_to_input rule, only spreads the kernel over
+    # min(cores, ceil(input bytes / 64 KB)) tasks).  Worker fork was
+    # always declared warmup cost (the comment above, r4) — this
+    # makes the warmup actually pay it for every worker the session
+    # can run.  Timed regions,
     # query set and metric definitions are unchanged.
     try:
         par = max(1, spark.sparkContext.defaultParallelism)

@@ -8,7 +8,11 @@ COMPUTE-BOUND rows — the ones whose kernels actually scale with
 cores — at each core count in a FRESH process (core count is a
 session-level property), bench methodology (cold + min-of-2 steady,
 release_barriers between passes), and emits one JSON line per
-(cpus, sf) for docs/SCALING_R14.json.
+(cpus, sf) for docs/SCALING_R14.json.  Timed passes materialize the
+full result with ``collect()``: under ``count()`` Catalyst prunes
+operators whose output no column needs (kmeans_train's
+ArrowEvalPython), so the probe would time less work than the row
+does.
 
 Usage: SPARK_GRAFT_CPUS=8 SPARK_GRAFT_SF_DIR=... python scripts/scaling_probe.py
 """
@@ -64,13 +68,13 @@ def main() -> None:
     for name in QUERIES:
         release_barriers(spark)
         t0 = time.perf_counter()
-        qs[name](spark, SF_DIR).count()
+        qs[name](spark, SF_DIR).collect()
         out["cold"][name] = round(time.perf_counter() - t0, 3)
         warm_times = []
         for _ in range(2):
             release_barriers(spark)
             t0 = time.perf_counter()
-            qs[name](spark, SF_DIR).count()
+            qs[name](spark, SF_DIR).collect()
             warm_times.append(time.perf_counter() - t0)
         out["steady"][name] = round(min(warm_times), 3)
         print(

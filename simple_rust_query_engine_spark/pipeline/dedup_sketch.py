@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import size_to_input
 from .dedup_core import (
     BAND_BUCKETS,
     _session_cached,
@@ -161,66 +162,7 @@ def minhash_signatures(docs: DataFrame, strong_hash: bool = False) -> DataFrame:
     return docs.select("doc_id", sig_udf(F.col("text")).alias("sig"))
 
 
-#: task-size floor for the widened signature kernel: below this much
-#: compressed input per task the per-task Arrow/Python round-trip
-#: outweighs the kernel compute (A/B at sf0.1: 581 KB / 5000 docs,
-#: width 8 ≈ 73 KB/task beat both width 1 and width 32 — 1.37 s vs
-#: 1.75 s vs 1.56 s for the full pair run).  Scale-adaptive by
-#: construction: the width grows with the input until the core count
-#: (min_tasks) caps it, and once splits outnumber cores the dial
-#: no-ops entirely.
-MIN_BYTES_PER_SIG_TASK = 64 * 1024
-
-
-def _input_bytes(docs: DataFrame) -> "int | None":
-    """Total on-disk bytes of a file-backed frame, from driver-side
-    metadata only (no job).  None when the frame has no resolvable
-    local input files (derived frames, non-file sources)."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = docs.inputFiles()
-        if not files:
-            return None
-        total = 0
-        for f in files:
-            p = urlparse(f)
-            if p.scheme not in ("", "file"):
-                return None
-            total += os.path.getsize(unquote(p.path))
-        return total
-    except Exception:
-        return None
-
-
-def _widen_docs(docs: DataFrame, min_tasks: int | None) -> DataFrame:
-    """Compact-input parallelism dial for the signature kernel: widen
-    the docs side to ``min(min_tasks, ceil(bytes /
-    MIN_BYTES_PER_SIG_TASK))`` partitions when it arrives narrower,
-    via one hash exchange on the unique doc_id (deterministic, no
-    sort-before-repartition — see ``_checkpointed_sigs``); otherwise
-    leave the plan untouched.  The byte count comes from driver-side
-    file metadata — no counting job, so the per-batch streaming
-    ingest can use the dial for free; a 0-byte input stays at one
-    task, and only an unresolvable input skips the floor and widens
-    to ``min_tasks``."""
-    if min_tasks is None:
-        return docs
-    width = int(min_tasks)
-    total = _input_bytes(docs)
-    if total is not None:
-        width = min(width, max(1, -(-total // MIN_BYTES_PER_SIG_TASK)))
-    if docs.rdd.getNumPartitions() < width:
-        return docs.repartition(width, F.col("doc_id"))
-    return docs
-
-
-def _checkpointed_sigs(
-    docs: DataFrame,
-    strong_hash: bool = False,
-    min_tasks: int | None = None,
-) -> DataFrame:
+def _checkpointed_sigs(docs: DataFrame, strong_hash: bool = False) -> DataFrame:
     """Materialized signature table shared by the full and incremental
     pair joins.
 
@@ -233,26 +175,18 @@ def _checkpointed_sigs(
     per-executor; recompute-on-executor-loss is the accepted trade
     (or persist(DISK) for reliability).
 
-    ``min_tasks`` — the same compact-input parallelism dial as
-    ``knn_join`` (guide §2.6): the signature kernel is compute-bound
-    per document, so its parallelism is the docs scan's split count,
-    and an sf corpus arriving as ONE parquet file runs the whole
-    Arrow pass on one core.  The exchange is inserted INSIDE the
-    checkpointed subtree — repartition the scan, then sign, then
-    checkpoint — so the materialized table keeps its size stats and
-    the downstream verify joins still auto-broadcast (an r13 A/B
-    that repartitioned docs OUTSIDE the barrier broke exactly that
-    and measured 5× WORSE).  Hash-partitioned on doc_id, NOT
-    round-robin: a keyless repartition first pays a local sort of
-    the full rows (``sortBeforeRepartition``, retry determinism) —
-    on document text that sort cost more than the widened kernel
-    saved — while hashing the unique doc_id is deterministic without
-    it and spreads evenly.  No-op once input splits reach
-    ``min_tasks``, so the 100 TB plan is unchanged; signatures are
-    per-row, so output is identical under any partitioning."""
+    The signature kernel is compute-bound per document, so the docs
+    side is sized by ``session.size_to_input`` (keyed on the unique
+    doc_id).  The sizing exchange sits INSIDE the checkpointed
+    subtree — size the scan, then sign, then checkpoint — so the
+    materialized table keeps its size stats and the downstream verify
+    joins still auto-broadcast (an r13 A/B that repartitioned docs
+    OUTSIDE the barrier broke exactly that and measured 5× WORSE).
+    Signatures are per-row, so output is identical under any
+    partitioning."""
     return (
         minhash_signatures(
-            _widen_docs(docs, min_tasks), strong_hash=strong_hash
+            size_to_input(docs, "doc_id"), strong_hash=strong_hash
         )
         # docs shorter than SHINGLE_N tokens have all-NULL signatures;
         # the oracle's NULL band never joins (NULL || ... = NULL), but
@@ -263,9 +197,7 @@ def _checkpointed_sigs(
     )
 
 
-def _checkpointed_bands(
-    docs: DataFrame, min_tasks: int | None = None
-) -> DataFrame:
+def _checkpointed_bands(docs: DataFrame) -> DataFrame:
     """ONE materialization for the per-batch ingest shape: signature
     UDF → null filter → band explode (sig carried) → checkpoint.
 
@@ -278,13 +210,11 @@ def _checkpointed_bands(
     plan the Arrow UDF evaluates once (the multi-consumer re-planning
     hazard ``_checkpointed_sigs`` exists for needs multiple
     consumers); the 4×-sig storage of the exploded layout is the
-    band-index layout already.  ``min_tasks`` widens the signature
-    kernel for compact batches exactly like ``_checkpointed_sigs``
-    (inside the barrier, so downstream auto-broadcasts keep their
-    stats)."""
+    band-index layout already.  The batch is sized inside the barrier
+    exactly like ``_checkpointed_sigs``."""
     return materialize(
         _band_exploded(
-            minhash_signatures(_widen_docs(docs, min_tasks)).filter(
+            minhash_signatures(size_to_input(docs, "doc_id")).filter(
                 F.element_at("sig", 1).isNotNull()
             ),
             with_sig=True,
@@ -332,19 +262,12 @@ def _with_pair_stats(cand: DataFrame, sigs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    strong_hash: bool = False,
-    min_tasks: int | None = None,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, strong_hash: bool = False) -> DataFrame:
     """Candidate near-dup pairs via banded LSH + exact signature
     agreement estimate. Returns (doc_a, doc_b, n_match, est_jaccard).
     ``strong_hash`` switches the whole stack (signatures → bands →
-    stats) to production blake2b shingle ids in one flag;
-    ``min_tasks`` widens the signature kernel for compact inputs
-    (see ``_checkpointed_sigs`` — output identical, default None
-    keeps the library plan unchanged)."""
-    sigs = _checkpointed_sigs(docs, strong_hash=strong_hash, min_tasks=min_tasks)
+    stats) to production blake2b shingle ids in one flag."""
+    sigs = _checkpointed_sigs(docs, strong_hash=strong_hash)
     bands = _band_exploded(sigs)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -356,15 +279,7 @@ def minhash_lsh_pairs(
 
 
 def q_dedup_minhash(t: dict) -> DataFrame:
-    # r14 (guide §2.6): the driver corpus arrives as ONE parquet
-    # split, so the Arrow signature kernel ran on one core of the
-    # session; the entry passes the min_tasks dial exactly like
-    # q_knn_join (adapts to SPARK_GRAFT_CPUS; no-op at scale where
-    # splits outnumber cores).  Signatures are per-row deterministic,
-    # so the pair set is identical under any partitioning.
-    docs = t["documents"]
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return minhash_lsh_pairs(docs, min_tasks=par)
+    return minhash_lsh_pairs(t["documents"])
 
 
 #: "new arrival" predicate for the incremental demo: every 5th doc

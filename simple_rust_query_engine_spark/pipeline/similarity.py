@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import size_to_input
+
 LSH_PLANES = 4  # bucket bits for the scale path
 
 
@@ -1574,28 +1576,12 @@ def knn_index_bytes(n: int, dim: int) -> int:
     return n * (dim * 8 + 16)
 
 
-def _apply_min_tasks(probe: DataFrame, min_tasks: int | None) -> DataFrame:
-    """The parallelism dial, one definition for both exact paths: when
-    the probe side has fewer partitions than ``min_tasks``, insert one
-    round-robin exchange so the compute-bound kernel gets full width;
-    otherwise leave the plan untouched.  The partition-count read
-    (``.rdd.getNumPartitions()``) plans the frame and, under AQE with
-    a shuffled upstream, can execute upstream stages eagerly — an
-    acceptable cost for an OPT-IN dial whose use case is a compact
-    FILE input (a plain scan plans instantly); leave the default None
-    on derived/shuffled frames."""
-    if min_tasks is not None and probe.rdd.getNumPartitions() < min_tasks:
-        probe = probe.repartition(min_tasks)
-    return probe
-
-
 def knn_join(
     emb: DataFrame,
     k: int = KNN_K,
     chunk: int = 512,
     mode: str = "auto",
     index_budget_bytes: int = KNN_INDEX_BUDGET_BYTES,
-    min_tasks: int | None = None,
 ) -> DataFrame:
     """EXACT k-nearest-neighbor self-join: for every vector, its ``k``
     most-cosine-similar neighbors with a dense rank — the
@@ -1612,17 +1598,17 @@ def knn_join(
     ``A @ B`` is NOT), division order dot/|a|/|b| mirrors the oracle,
     self is masked, and ties break toward the lower neighbor id
     (``np.lexsort`` — secondary key vec_id ascending).  Only n·k rows
-    leave the UDF; zero Exchange (pinned in
+    leave the UDF; no key shuffle (pinned in
     ``tests/test_plans.py::test_knn_join_plan_is_map_only``).
 
     Scale: the broadcast side must fit executor memory — and since
     r10 the choice is a DIAL, not a docstring.  ``mode="auto"`` (the
     default) estimates the index size from one cached (count, dim)
-    aggregate: within ``index_budget_bytes`` it broadcasts (map-only,
-    zero exchange — the sf corpora land here, so the driver row's
-    plan and hash are unchanged); past the budget it delegates to
-    ``knn_join_twophase`` with tiles = ⌈est / budget⌉, so each
-    per-tile broadcast fits the budget by construction.  Both paths
+    aggregate: within ``index_budget_bytes`` it broadcasts (one
+    index, no key shuffle — the sf corpora land here); past the
+    budget it delegates to ``knn_join_twophase`` with tiles =
+    ⌈est / budget⌉, so each per-tile broadcast fits the budget by
+    construction.  Both paths
     share one oracle — the output is identical either way
     (property-tested), only the plan changes.  ``mode="broadcast"`` /
     ``mode="twophase"`` force a path.  Row-side memory is bounded by
@@ -1631,18 +1617,16 @@ def knn_join(
     (IVF cell / LSH bucket union, see ``ann_ivf``/``ann_lsh``) when
     approximate recall suffices.
 
-    ``min_tasks`` — parallelism dial for COMPACT inputs: the kernel
-    is compute-bound (n·dim FLOPs per probe row), so its parallelism
-    is the probe side's partition count, and a corpus arriving as a
-    handful of parquet splits strands the rest of the cluster
+    The kernel is compute-bound (n·dim FLOPs per probe row), so its
+    parallelism is the probe side's partition count: a corpus
+    arriving as a handful of parquet splits strands the cluster
     (measured, sf1 soak: 20k vectors in one file ⇒ 2 tasks on 32
-    cores, 106–119 s; with min_tasks=32, 9.4–11.5 s — identical
-    output, docs/AB_R11_knn_min_tasks.jsonl).  Set it to the core
-    count to trade ONE round-robin exchange for full-width compute;
-    the default None keeps the plan map-only (the plan pin), which is
-    already right at 100 TB where input splits outnumber cores.
-    Threaded through both delegating modes (twophase applies it to
-    the shared probe side every tile pass maps over)."""
+    cores, 106–119 s; widened to 32 tasks, 9.4–11.5 s — identical
+    output; the r11 sf1 soak A/B under docs/).  The probe side is
+    therefore sized by ``session.size_to_input`` on vec_id, shared by
+    both paths: one hash exchange when the scan is narrower than its
+    input bytes warrant, none once input splits outnumber that width
+    (the at-scale plan stays map-only)."""
     if mode not in ("auto", "broadcast", "twophase"):
         raise ValueError(f"unknown knn_join mode {mode!r}")
     if mode == "twophase":
@@ -1651,7 +1635,6 @@ def knn_join(
             k,
             chunk=chunk,
             index_budget_bytes=index_budget_bytes,
-            min_tasks=min_tasks,
         )
     if mode == "auto":
         n, dim = _knn_geometry(emb)
@@ -1664,10 +1647,9 @@ def knn_join(
                 tiles=tiles,
                 chunk=chunk,
                 index_budget_bytes=index_budget_bytes,
-                min_tasks=min_tasks,
             )
     bc = knn_index(emb)
-    probe = _apply_min_tasks(emb.select("vec_id", "embedding"), min_tasks)
+    probe = size_to_input(emb.select("vec_id", "embedding"), "vec_id")
     return probe.mapInPandas(knn_score_fn(bc, k, chunk), KNN_SCHEMA)
 
 
@@ -1820,16 +1802,7 @@ def knn_score_fn(bc, k: int = KNN_K, chunk: int = 512):
 
 
 def q_knn_join(t: dict) -> DataFrame:
-    # r13 (guide §2.6): the driver corpus arrives as ONE parquet split,
-    # so the compute-bound scoring kernel ran on one core; the entry
-    # passes the min_tasks dial (defaultParallelism — adapts to
-    # SPARK_GRAFT_CPUS, and _apply_min_tasks no-ops once input splits
-    # outnumber cores, so the 100 TB plan stays map-only).  Output is
-    # identical under any partitioning (per-row top-k vs the broadcast
-    # index, property-tested).
-    emb = t["embeddings"]
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    return knn_join(emb, min_tasks=par)
+    return knn_join(t["embeddings"])
 
 
 #: corpus tiles for the two-phase exact k-NN (sized so ONE tile's
@@ -1844,7 +1817,6 @@ def knn_join_twophase(
     tiles: int = KNN_TILES,
     chunk: int = 512,
     index_budget_bytes: int | None = None,
-    min_tasks: int | None = None,
 ) -> DataFrame:
     """EXACT k-NN self-join WITHOUT a full-corpus broadcast — the
     scale fallback ``knn_join``'s docstring names for when the index
@@ -1865,15 +1837,12 @@ def knn_join_twophase(
 
     Phase 2 (one exchange): the n·k·tiles candidate rows — k rows per
     vector per tile, NOT the corpus — hash-shuffle ONCE on vec_id and
-    a per-key rank keeps the global top-k.  Plan pinned: ``tiles``
-    MapInPandas nodes, exactly one hashpartitioning exchange, zero
-    BroadcastExchange (the per-tile indexes are task broadcasts, never
-    plan-side joins).  ``min_tasks`` (default None — plan unchanged)
-    is the same parallelism dial as ``knn_join``'s, applied once to
-    the shared probe side every tile pass maps over: a compact input
-    strands the compute-bound kernel tiles× over, and the dial adds
-    ONE round-robin exchange to fix it (see ``knn_join``'s docstring
-    for the measured sf1 numbers).
+    a per-key rank keeps the global top-k.  Plan pinned:
+    ``tiles`` MapInPandas nodes, zero BroadcastExchange (the per-tile
+    indexes are task broadcasts, never plan-side joins) and one
+    vec_id hash exchange for the merge, plus ``knn_join``'s sizing
+    exchange on the shared probe side every tile pass maps over when
+    the scan is narrower than its input bytes warrant.
 
     The precondition is ENFORCED, not just documented: every tile
     must be empty (harmless — it contributes no candidates) or hold
@@ -1940,8 +1909,8 @@ def knn_join_twophase(
                 "(ann_ivf_knn_join)",
                 stacklevel=2,
             )
-        return knn_join(emb, k, chunk, mode="broadcast", min_tasks=min_tasks)
-    probe = _apply_min_tasks(emb.select("vec_id", "embedding"), min_tasks)
+        return knn_join(emb, k, chunk, mode="broadcast")
+    probe = size_to_input(emb.select("vec_id", "embedding"), "vec_id")
     cand = None
     for t in range(tiles):
         bc = knn_index(emb, tile=(t, tiles))
@@ -2229,16 +2198,10 @@ def knn_recall_ivf(
     semi-join and the denominator aggregate, and unbarriered the
     map-only kernel (and the corpus scan under it) would execute
     twice.  The hit check is a semi-join on (vec_id, nbr_id) — n·k
-    rows against n·k rows, never corpus-sized.  The exact leg gets
-    the ``min_tasks`` parallelism dial (r13, guide §2.6): a compact
-    corpus arriving as one parquet split would score on ONE core of
-    the cluster; ``defaultParallelism`` adapts to the session's core
-    count, and past the point where input splits outnumber cores the
-    dial is a no-op by construction."""
+    rows against n·k rows, never corpus-sized."""
     from .dedup_core import materialize
 
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    exact = materialize(knn_join(emb, k, mode="broadcast", min_tasks=par))
+    exact = materialize(knn_join(emb, k, mode="broadcast"))
     approx = ann_ivf_knn_join(emb, k, n_cells, n_iters)
     hits = exact.join(
         approx.select("vec_id", "nbr_id"), ["vec_id", "nbr_id"], "left_semi"
@@ -2298,12 +2261,10 @@ def knn_recall_ivf_probe(
     which emits both legs' candidates from a single grouped pass
     (``_cell_topk_both_fn`` — each leg through the same
     ``_topk_frames`` fold as the unfused kernels, so both recalls are
-    bit-identical); the exact leg gets the same ``min_tasks``
-    parallelism dial as ``knn_recall_ivf``."""
+    bit-identical)."""
     from .dedup_core import materialize
 
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    exact = materialize(knn_join(emb, k, mode="broadcast", min_tasks=par))
+    exact = materialize(knn_join(emb, k, mode="broadcast"))
     denom = exact.agg(
         F.count_distinct("vec_id").alias("n_queries"),
         F.count(F.lit(1)).alias("n_exact_pairs"),
@@ -2534,12 +2495,10 @@ def knn_recall_ivf_pq(
     k-NN — the eval metric that decides whether the compressed index
     can serve the k-NN-everything workload.  Same shape/zero-guard
     as ``knn_recall_ivf``; both sides deterministic, so the metric
-    itself is hash-checked.  The exact leg gets the same ``min_tasks``
-    parallelism dial as ``knn_recall_ivf`` (r13, guide §2.6)."""
+    itself is hash-checked."""
     from .dedup_core import materialize
 
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    exact = materialize(knn_join(emb, k, mode="broadcast", min_tasks=par))
+    exact = materialize(knn_join(emb, k, mode="broadcast"))
     approx = ann_ivf_pq_knn_join(emb, k, r)
     hits = exact.join(
         approx.select("vec_id", "nbr_id"), ["vec_id", "nbr_id"], "left_semi"
@@ -2565,9 +2524,7 @@ def q_knn_recall_ivf_pq(t: dict) -> DataFrame:
     return knn_recall_ivf_pq(t["embeddings"])
 
 
-def knn_label_spread(
-    emb: DataFrame, k: int = KNN_K, min_tasks: int | None = None
-) -> DataFrame:
+def knn_label_spread(emb: DataFrame, k: int = KNN_K) -> DataFrame:
     """k-NN LABEL SPREAD — majority vote of each vector's k nearest
     neighbors vs its own label: the weak-supervision primitive (spread
     a small labeled seed set over an unlabeled corpus; audit label
@@ -2581,13 +2538,10 @@ def knn_label_spread(
     deterministic ties toward the smaller label, and NO window (a
     row_number window would re-sort every group; max is mergeable
     map-side).  Two hash exchanges over n·k rows total, both on
-    near-uniform keys — scales.
-
-    ``min_tasks`` is ``knn_join``'s parallelism dial, passed through
-    unchanged (r13, guide §2.6): the vote/argmax tail is partitioning-
-    independent aggregation, so the spread output is identical under
-    any kernel partitioning (the dial's own property test)."""
-    nn = knn_join(emb, k, min_tasks=min_tasks)
+    near-uniform keys — scales.  The vote/argmax tail is
+    partitioning-independent aggregation, so the output is identical
+    however ``knn_join`` sizes its kernel."""
+    nn = knn_join(emb, k)
     lab = emb.select("vec_id", "label")
     votes = (
         nn.join(
@@ -2628,14 +2582,7 @@ def knn_label_spread(
 
 
 def q_knn_label_spread(t: dict) -> DataFrame:
-    # r13 (guide §2.6): same dial as q_knn_join — the driver corpus is
-    # ONE parquet split, so the compute-bound scoring kernel under the
-    # spread ran on one core; defaultParallelism adapts to
-    # SPARK_GRAFT_CPUS and _apply_min_tasks no-ops once input splits
-    # outnumber cores.  Vote/argmax output is partitioning-independent.
-    emb = t["embeddings"]
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    return knn_label_spread(emb, min_tasks=par)
+    return knn_label_spread(t["embeddings"])
 
 
 def q_embedding_neardup(t: dict) -> DataFrame:

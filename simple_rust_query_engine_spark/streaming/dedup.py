@@ -271,7 +271,6 @@ def stream_minhash_ingest(
     release_batch_barriers: bool = True,
     label_table: str | None = None,
     label_path: str | None = None,
-    min_tasks: int | None = None,
 ):
     """Continuous LSH near-dup ingest THROUGH the streaming engine —
     the streaming twin of the persisted band index
@@ -360,11 +359,8 @@ def stream_minhash_ingest(
         sc = spark.sparkContext
         live_before = set(persistent_rdds(sc)) if release_batch_barriers else ()
         # one barrier per batch (r14): sign → filter → band-explode →
-        # checkpoint in a single job (see _checkpointed_bands); the
-        # min_tasks dial widens the compute-bound signature kernel
-        # when a batch arrives as fewer splits than the session has
-        # cores (no-op at scale — same dial as the batch rows)
-        bands = _checkpointed_bands(batch_df, min_tasks=min_tasks)
+        # checkpoint in a single job (see _checkpointed_bands)
+        bands = _checkpointed_bands(batch_df)
         bands.write.mode("append").option("path", index_path).saveAsTable(
             index_table
         )
@@ -435,9 +431,6 @@ def q_dedup_minhash_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         pairs_table,
         pairs_path=os.path.join(tmp, "pairs"),
         query_name=f"minhash_ingest_{run}",
-        # driver batches arrive as one parquet split; widen the
-        # signature kernel like the batch entries (no-op at scale)
-        min_tasks=spark.sparkContext.defaultParallelism,
     )
     q.processAllAvailable()
     q.stop()
@@ -482,8 +475,6 @@ def q_dedup_labels_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_name=f"labels_stream_{run}",
         label_table=label_table,
         label_path=os.path.join(tmp, "labels"),
-        # same compact-batch kernel dial as the ingest entry above
-        min_tasks=spark.sparkContext.defaultParallelism,
     )
     q.processAllAvailable()
     q.stop()

@@ -111,8 +111,11 @@ def test_bench_plausibility_gate():
         open(os.path.join(REPO, "docs", "BENCH_STEADY_REF.json"))
     )
     base = ref["steady"]["tpch_q1"]
+    # the gate's own applicability test: sf AND core count, the cores
+    # read exactly as bench.py reads them
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    if m.SF_DIR.rstrip("/").endswith("sf0.1"):
+    if m.SF_DIR.rstrip("/").endswith("sf0.1") and cpus == int(ref["cpus"]):
         out, ok = m._steady_outliers({"tpch_q1": base * 1.5})
         assert ok is True and out == {}
         out, ok = m._steady_outliers(
@@ -122,6 +125,7 @@ def test_bench_plausibility_gate():
         out, ok = m._steady_outliers({"query_without_ref": 99.0})
         assert ok is True and out == {}
     else:
-        # bench module bound to a non-reference SF: gate reports N/A
+        # bench module bound to a non-reference sf or core count:
+        # gate reports N/A
         out, ok = m._steady_outliers({"tpch_q1": base * 5.0})
         assert ok is None and out == {}

@@ -1,6 +1,7 @@
 """Runtime paths not covered by the oracle harness: mapInPandas
 decode plumbing, frame sampling, Structured Streaming end-to-end."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from simple_rust_query_engine_spark.pipeline.multimodal import (
@@ -763,44 +764,6 @@ def test_ngram_candidate_aggregation_matches_row_filtered_distinct(tables):
     ref_set = {(r.doc_a, r.doc_b) for r in ref.collect()}
     cand_set = {(r.doc_a, r.doc_b) for r in cand.collect()}
     assert cand_set == ref_set and len(cand_set) > 0
-
-
-def test_minhash_sig_dial_identical_output_and_width(tables, spark, tmp_path):
-    # r14 (guide §2.6): the signature-kernel dial must leave the pair
-    # set bit-identical (signatures are per-row) and actually widen
-    # the checkpointed table, bounded by the docs-per-task floor
-    from simple_rust_query_engine_spark.pipeline.dedup_sketch import (
-        MIN_BYTES_PER_SIG_TASK,
-        _checkpointed_sigs,
-        _input_bytes,
-        minhash_lsh_pairs,
-    )
-
-    docs = tables["documents"]
-    base = minhash_lsh_pairs(docs)
-    dial = minhash_lsh_pairs(docs, min_tasks=8)
-    assert {tuple(r) for r in base.collect()} == {
-        tuple(r) for r in dial.collect()
-    }
-    total = _input_bytes(docs)
-    assert total and total > 0  # plain parquet scan must resolve
-    expect = min(8, max(1, -(-total // MIN_BYTES_PER_SIG_TASK)))
-    scan_parts = docs.rdd.getNumPartitions()
-    got = _checkpointed_sigs(docs, min_tasks=8).rdd.getNumPartitions()
-    # the dial only fires when the scan arrives narrower than the
-    # floor-bounded width (env-tolerant, ADVICE r13)
-    if scan_parts < expect:
-        assert got == expect, (got, expect)
-    else:
-        assert got == scan_parts, (got, scan_parts)
-    # a resolvable 0-byte input keeps the bytes-per-task floor (one
-    # task) instead of widening to the full min_tasks
-    empty_file = tmp_path / "empty.parquet"
-    empty_file.touch()
-    empty = spark.read.schema(docs.schema).parquet(str(empty_file))
-    assert _input_bytes(empty) == 0
-    got = _checkpointed_sigs(empty, min_tasks=8).rdd.getNumPartitions()
-    assert got <= 1, got
 
 
 def test_ppjoin_candidate_estimate_bounds_actual(tables):
@@ -1757,23 +1720,145 @@ def test_bpe_train_batched_matches_python_batched_reference(tables):
     )
 
 
-def test_knn_join_min_tasks_dial(tables):
-    # the parallelism dial (sf1 soak follow-up: a compact corpus in
-    # one parquet file strands the cluster on the compute-bound
-    # kernel): identical output, exactly one extra round-robin
-    # exchange, default stays map-only
+@pytest.fixture(scope="module")
+def sizing_inputs(spark, tables, tmp_path_factory):
+    """Per input kind, one parquet file set each for the k-NN probe
+    (embeddings) and the minhash docs side (documents): ``single``
+    is one split above the floor, ``small`` one split below it,
+    ``empty`` a 0-byte file and ``wide`` at least as many splits as
+    the rule's width (more on any host with over two cores).  Written uncompressed so the bytes track the rows."""
+    root = tmp_path_factory.mktemp("sizing")
+    cores = spark.sparkContext.defaultParallelism
+    docs = tables["documents"]
+    rest = [c for c in docs.columns if c not in ("doc_id", "text")]
+    # three copies with fresh ids and a per-copy token: enough bytes
+    # for a width above 1, and cross-copy near-duplicate pairs
+    for i, tag in ((1, "copyone"), (2, "copytwo")):
+        docs = docs.unionByName(
+            tables["documents"].select(
+                (F.col("doc_id") + i * 10**6).alias("doc_id"),
+                *rest,
+                F.concat_ws(" ", "text", F.lit(tag)).alias("text"),
+            )
+        )
+    out = {}
+    for kind, src, key in (
+        ("emb", tables["embeddings"], "vec_id"),
+        ("docs", docs, "doc_id"),
+    ):
+        frames = {
+            "single": src.coalesce(1),
+            "small": src.orderBy(key).limit(20).coalesce(1),
+            # 40% of the rows, so the width stays under the core
+            # count, in more files than cores (Spark packs small
+            # files toward one split per core)
+            "wide": src.filter(F.pmod(key, 5) < 2).repartition(
+                2 * cores + 2, key
+            ),
+        }
+        for case, df in frames.items():
+            path = str(root / f"{kind}_{case}")
+            df.write.option("compression", "none").parquet(path)
+            out[kind, case] = path
+        empty = root / f"{kind}_empty.parquet"
+        empty.touch()
+        out[kind, "empty"] = str(empty)
+    return out, {"emb": tables["embeddings"].schema, "docs": docs.schema}
+
+
+def _kernel_output(kernel, df):
+    """(sized kernel output, its partition count, the rows it must
+    hold — None where a DuckDB twin checks them instead)."""
+    import simple_rust_query_engine_spark.pipeline.dedup_sketch as DS
     import simple_rust_query_engine_spark.pipeline.similarity as S
 
-    emb = tables["embeddings"]
-    base = S.knn_join(emb, mode="broadcast")
-    dial = S.knn_join(emb, mode="broadcast", min_tasks=8)
-    assert {tuple(r) for r in base.collect()} == {
-        tuple(r) for r in dial.collect()
-    }
-    base_plan = base._jdf.queryExecution().executedPlan().toString()
-    dial_plan = dial._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in base_plan, base_plan
-    # executed AQE plans print Final + Initial sections — the exchange
-    # appears in each; assert presence in the dial plan and absence in
-    # the default plan (the contract, not the section count)
-    assert "roundrobinpartitioning" in dial_plan.lower(), dial_plan
+    if kernel == "knn_probe":
+        out = S.knn_join(df, mode="broadcast")
+        return out, out.rdd.getNumPartitions(), None
+    if kernel == "sigs":
+        parts = DS._checkpointed_sigs(df).rdd.getNumPartitions()
+        return DS.minhash_lsh_pairs(df), parts, None
+    bands = DS._checkpointed_bands(df)
+    # the band kernel has no SQL twin: its rows are the same per-row
+    # expressions over the frame as it arrived
+    ref = DS._band_exploded(
+        DS.minhash_signatures(df).filter(F.element_at("sig", 1).isNotNull()),
+        with_sig=True,
+    )
+    rows = {(r.doc_id, r.band, tuple(r.sig)) for r in ref.collect()}
+    return bands, bands.rdd.getNumPartitions(), rows
+
+
+@pytest.mark.parametrize("case", ["single", "small", "empty", "wide"])
+@pytest.mark.parametrize("kernel", ["knn_probe", "sigs", "bands"])
+def test_kernel_sizing_rule(spark, sizing_inputs, kernel, case):
+    # one rule sizes every widened kernel from its input bytes:
+    # width = min(cores, max(1, ceil(bytes / MIN_BYTES_PER_TASK))); a
+    # narrower input gets exactly that width, any other is left as it
+    # arrived, and the output never depends on the sizing
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+    from simple_rust_query_engine_spark.session import (
+        MIN_BYTES_PER_TASK,
+        input_bytes,
+    )
+    from simple_rust_query_engine_spark.testing import compare
+
+    paths, schemas = sizing_inputs
+    kind = "emb" if kernel == "knn_probe" else "docs"
+    df = spark.read.schema(schemas[kind]).parquet(paths[kind, case])
+    total = input_bytes(df)
+    cores = spark.sparkContext.defaultParallelism
+    width = min(cores, max(1, -(-total // MIN_BYTES_PER_TASK)))
+    scan = df.rdd.getNumPartitions()
+    out, parts, rows = _kernel_output(kernel, df)
+    if case == "single":
+        assert scan == 1 and total > MIN_BYTES_PER_TASK, (scan, total)
+        assert parts == width, (parts, width)
+    elif case == "small":
+        assert total < MIN_BYTES_PER_TASK, total
+        assert parts == scan == 1, (parts, scan)
+    elif case == "empty":
+        assert total == 0 and parts <= 1, (total, parts)
+        assert out.collect() == []
+        return
+    else:
+        assert scan >= width and parts == scan, (scan, width, parts)
+    if rows is not None:
+        assert {(r.doc_id, r.band, tuple(r.sig)) for r in out.collect()} == rows
+        return
+    table = "embeddings" if kind == "emb" else "documents"
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW {table} AS SELECT * FROM "
+        f"read_parquet('{paths[kind, case]}/*.parquet')"
+    )
+    name = "knn_join" if kernel == "knn_probe" else "dedup_minhash"
+    assert compare(out, con, entry_mod.oracle_sql()[name]) == []
+
+
+def test_sizing_a_shuffled_input_runs_no_job(spark, sizing_inputs):
+    # a shuffled frame's partition count is known only once its
+    # upstream stages run; sizing must not run them while the plan is
+    # being built, so it leaves such a frame to AQE
+    from simple_rust_query_engine_spark.session import (
+        MIN_BYTES_PER_TASK,
+        input_bytes,
+        size_to_input,
+    )
+
+    paths, schemas = sizing_inputs
+    docs = spark.read.schema(schemas["docs"]).parquet(paths["docs", "single"])
+    shuffled = docs.distinct()
+    # above the floor, so the rule does reach the partition question
+    assert input_bytes(shuffled) > MIN_BYTES_PER_TASK
+    sc = spark.sparkContext
+    sc.setJobGroup("sizing_no_job", "size a shuffled input")
+    try:
+        sized = size_to_input(shuffled, "doc_id")
+        jobs = list(sc.statusTracker().getJobIdsForGroup("sizing_no_job"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [], jobs
+    assert sized is shuffled

@@ -686,39 +686,60 @@ def test_bpe_merges_trained_once_per_session_corpus(spark):
         assert DC._STATE_CACHE[k] is v, k
 
 
+def _knn_sizing_exchanges(spark) -> int:
+    """Sizing exchanges ``session.size_to_input`` adds to the k-NN
+    probe over the test embeddings: one when the scan has fewer
+    splits than min(cores, ceil(bytes / MIN_BYTES_PER_TASK)), else
+    none (one split of 193,646 B at sf0.001 → one on any multi-core
+    session)."""
+    from simple_rust_query_engine_spark.session import (
+        MIN_BYTES_PER_TASK,
+        input_bytes,
+        load_tables,
+    )
+
+    emb = load_tables(spark, SF_DIR)["embeddings"]
+    width = min(
+        spark.sparkContext.defaultParallelism,
+        max(1, -(-input_bytes(emb) // MIN_BYTES_PER_TASK)),
+    )
+    return int(emb.rdd.getNumPartitions() < width)
+
+
+def _run_exchanges(df) -> list[str]:
+    """Collect ``df`` and return the Exchange nodes of its final
+    adaptive plan: the shuffles that ran, an exchange reused by
+    several consumers counted once."""
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().executedPlan()
+    nodes = [line.split("+- ", 1)[-1] for line in final.toString().splitlines()]
+    return [n for n in nodes if n.startswith("Exchange")]
+
+
 def test_knn_join_plan_is_map_only(spark):
     # the k-NN self-join ships the index as a task broadcast and emits
     # n·k rows straight from the kernel: one ArrowEvalPython-family
-    # node (mapInPandas) and NO key shuffle.  Since r13 the driver
-    # entry passes the min_tasks dial, so at compact (test/driver)
-    # scale the plan carries exactly one ROUND-ROBIN exchange that
-    # widens the single-split scan to the core count; the dial no-ops
-    # once input splits outnumber cores, so the at-scale plan stays
-    # zero-Exchange (pinned by test_knn_join_min_tasks_dial's
-    # partition-count branch and the kernel's own library default).
+    # node (mapInPandas) and no shuffle of its output.  The only
+    # exchange is the probe side's sizing exchange (a vec_id hash),
+    # present exactly when the scan is narrower than its input bytes
+    # warrant; an at-scale corpus whose splits outnumber that width
+    # stays zero-Exchange (test_kernel_sizing_rule's "wide" case)
     plan = (
         _q(spark, "knn_join")._jdf.queryExecution().executedPlan().toString()
     )
-    assert "MapInPandas" in plan, plan
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert plan.count("Exchange") <= 1, plan
-    # the library default stays map-only: no exchange without the dial
-    from simple_rust_query_engine_spark.pipeline.similarity import knn_join
-    from simple_rust_query_engine_spark.session import load_tables
-
-    lib_plan = (
-        knn_join(load_tables(spark, SF_DIR)["embeddings"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in lib_plan, lib_plan
+    sizing = _knn_sizing_exchanges(spark)
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("Exchange") == sizing, plan
+    assert plan.count("Exchange hashpartitioning(vec_id") == sizing, plan
+    assert plan.count("REPARTITION_BY_NUM") == sizing, plan
 
 
 def test_knn_auto_dial_picks_by_index_budget(spark, tables):
     # VERDICT r9 item 3: mode="auto" (the default) picks broadcast vs
     # two-phase from the estimated index bytes against the executor
     # budget.  On the sf corpora the estimate sits far under the
-    # default budget → broadcast (map-only, zero exchange — the
-    # driver row's plan is untouched); a forced-low budget must
+    # default budget → broadcast (one MapInPandas, no exchange but
+    # the probe's sizing one); a forced-low budget must
     # switch to two-phase with tiles = ceil(est / budget), each tile
     # broadcast within budget by construction — and the OUTPUT must
     # be identical either way.
@@ -736,7 +757,9 @@ def test_knn_auto_dial_picks_by_index_budget(spark, tables):
     est = knn_index_bytes(n, dim)
     assert 0 < est < KNN_INDEX_BUDGET_BYTES
     plan = knn_join(emb)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan and "Exchange" not in plan, plan
+    sizing = _knn_sizing_exchanges(spark)
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("Exchange") == plan.count("REPARTITION_BY_NUM") == sizing
 
     budget = est // 3 + 1
     want_tiles = -(-est // budget)
@@ -744,8 +767,9 @@ def test_knn_auto_dial_picks_by_index_budget(spark, tables):
     df = knn_join(emb, index_budget_bytes=budget)
     plan2 = df._jdf.queryExecution().executedPlan().toString()
     assert plan2.count("MapInPandas") == want_tiles, plan2
-    assert plan2.count("Exchange hashpartitioning") == 1, plan2
     assert "BroadcastExchange" not in plan2, plan2
+    ran = _run_exchanges(df)
+    assert len(ran) == 1 + sizing, ran
 
     a = sorted(map(tuple, knn_join(emb, mode="broadcast").collect()))
     b = sorted(map(tuple, df.collect()))
@@ -898,44 +922,20 @@ def test_knn_label_spread_plan_two_uniform_exchanges(spark):
     # vote count + struct-max argmax: two partial-aggregated hash
     # exchanges over n*k rows, labels attached by broadcast, the
     # scoring itself one MapInPandas — and NO window (a row_number
-    # formulation would re-sort every group).  Since r13 the entry
-    # passes knn_join's min_tasks dial, so at compact scale the plan
-    # additionally carries the kernel's ONE round-robin exchange
-    # (same contract as test_knn_join_plan_is_map_only); the library
-    # default stays dial-free and the vote/argmax output is
-    # partitioning-independent.
+    # formulation would re-sort every group).  The k-NN kernel under
+    # it adds its probe-side sizing exchange exactly as in
+    # test_knn_join_plan_is_map_only.
     plan = (
         _q(spark, "knn_label_spread")
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert plan.count("Exchange hashpartitioning") == 2, plan
+    sizing = _knn_sizing_exchanges(spark)
+    assert plan.count("Exchange hashpartitioning") == 2 + sizing, plan
+    assert plan.count("REPARTITION_BY_NUM") == sizing, plan
     assert plan.count("BroadcastExchange") == 2, plan
     assert plan.count("MapInPandas") == 1, plan
     assert "Window" not in plan and "rangepartitioning" not in plan, plan
-    # the dial's round-robin exchange appears only when the session is
-    # wider than the embeddings scan's split count — guard instead of
-    # asserting unconditionally (ADVICE r13: under SPARK_GRAFT_CPUS=1
-    # or a multi-split test corpus the dial correctly no-ops)
-    from simple_rust_query_engine_spark.session import load_tables
-
-    emb = load_tables(spark, SF_DIR)["embeddings"]
-    if (
-        spark.sparkContext.defaultParallelism
-        > emb.rdd.getNumPartitions()
-    ):
-        assert "roundrobinpartitioning" in plan.lower(), plan
-
-    from simple_rust_query_engine_spark.pipeline.similarity import (
-        knn_label_spread,
-    )
-
-    base = knn_label_spread(emb)
-    lib_plan = base._jdf.queryExecution().executedPlan().toString()
-    assert "roundrobinpartitioning" not in lib_plan.lower(), lib_plan
-    dial = knn_label_spread(emb, min_tasks=8)
-    assert {tuple(r) for r in base.collect()} == {
-        tuple(r) for r in dial.collect()
-    }
+    assert "roundrobinpartitioning" not in plan.lower(), plan
 
 
 def test_knn_twophase_plan_one_merge_exchange_no_broadcast(spark):
@@ -943,18 +943,23 @@ def test_knn_twophase_plan_one_merge_exchange_no_broadcast(spark):
     # indexes ship as task broadcasts (invisible to the plan — there
     # must be NO BroadcastExchange, the full corpus never joins
     # plan-side), each tile scores through its own MapInPandas, and
-    # the ONLY exchange is the vec_id hash merge of the n·k·tiles
-    # candidate rows to the global top-k
+    # the only exchanges are the vec_id hash merge of the n·k·tiles
+    # candidate rows to the global top-k and the shared probe side's
+    # sizing exchange when the scan is narrower than its input bytes
+    # warrant (test_knn_join_plan_is_map_only)
     from simple_rust_query_engine_spark.pipeline.similarity import KNN_TILES
 
-    plan = (
-        _q(spark, "knn_join_twophase")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    df = _q(spark, "knn_join_twophase")
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == KNN_TILES, plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "vec_id" in plan.split("Exchange hashpartitioning", 1)[1][:80]
     assert "BroadcastExchange" not in plan, plan
+    # every tile pass maps over the same sized probe, so its one
+    # sizing shuffle runs once and is reused by the other passes
+    ran = _run_exchanges(df)
+    sizing = _knn_sizing_exchanges(spark)
+    assert len(ran) == 1 + sizing, ran
+    assert all(e.startswith("Exchange hashpartitioning(vec_id") for e in ran), ran
+    assert sum("REPARTITION_BY_NUM" in e for e in ran) == sizing, ran
     assert "CartesianProduct" not in plan, plan
 
 
