@@ -73,8 +73,9 @@ _DRIVER_CAP = 50
 #: empty the tuple at round close.
 _CHANGED = (
     # the stream rows write their band index and label state as plain
-    # (unbucketed) tables; every row here sizes its k-NN probe or
-    # minhash docs side with session.size_to_input
+    # (unbucketed) tables, and dedup_labels_stream folds each batch's
+    # edges with a driver-side union-find; every row here sizes its
+    # k-NN probe or minhash docs side with session.size_to_input
     "dedup_minhash",
     "dedup_minhash_ingest_stream",
     "dedup_labels_stream",

@@ -163,6 +163,7 @@ from .dedup_ingest import (  # noqa: F401
     q_decontaminate_fuzzy,
     q_dedup_keep_best,
     q_pipeline_incr_stateful,
+    relabel_map,
 )
 from .dedup_oracles import (  # noqa: F401
     ORACLE,

@@ -10,6 +10,7 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from ..session import persistent_rdds
 from .dedup_core import _state_table, materialize
@@ -145,11 +146,10 @@ def commit_label_state(
     table at ``path`` holding exactly the current (doc_id, label)
     rows, so its scan is split by bytes like any file read; nothing
     reading it needs a bucket layout (the fold's anti-join broadcasts
-    the batch).  The merged frame is hard-materialized first
-    (``merge_labels`` output already truncates lineage at the CC
-    loop, but the final vertex join is lazy): a plan still
-    referencing the table being overwritten would read files the
-    overwrite is deleting.  ``barrier=False`` skips that
+    the batch).  The merged frame is hard-materialized first (the
+    fold's relabel is a lazy projection over the state scan): a plan
+    still referencing the table being overwritten would read files
+    the overwrite is deleting.  ``barrier=False`` skips that
     materialization — ONLY valid when the caller can prove the plan
     never reads ``table`` (the first batch of a stream, where the
     state table does not exist yet).  The table is refreshed on
@@ -158,6 +158,36 @@ def commit_label_state(
         "overwrite"
     ).option("path", path).saveAsTable(table)
     spark.catalog.refreshTable(table)
+
+
+def relabel_map(edges, labels: dict) -> dict:
+    """Union-find over one batch's near-dup ``edges`` (doc id pairs)
+    on a star-forest label state: returns {old label → new label} for
+    every component label the batch changes.
+
+    ``labels`` maps doc id → label for the edge endpoints the state
+    holds; an endpoint it lacks (an arriving doc, or one only the
+    band index has seen) keeps its own id, as connected components
+    over (star forest ∪ edges) would give it.  Each label is the
+    minimum doc id of its component, so an edge can only merge whole
+    components, and the merged component's minimum is the smallest
+    of its labels: the smaller root wins every union.  Every key maps
+    straight to its final root, so one lookup applies the map."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while x != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        ra, rb = find(labels.get(a, a)), find(labels.get(b, b))
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
 
 
 def fold_edges_into_labels(
@@ -175,12 +205,29 @@ def fold_edges_into_labels(
 
     ``pairs`` is the batch's probe result (``doc_a, doc_b, n_match``);
     rows at >= ``MH_DUP_NM`` agreeing signature rows become edges.
+    The fold runs on the driver, because a batch's edges are few: a
+    single batch holding the whole corpus has 25 of them at sf0.01,
+    256 at sf0.1 and 91 on the seeded sf1 corpus of
+    ``scripts/gen_sf1.py``, whose only near-dups are its injected
+    exact copies (banded-LSH pairs counted on DuckDB).  It collects
+    the edges, looks up the state labels of their endpoints with one
+    filtered scan, and runs ``relabel_map``; the map is applied to
+    every state row as a literal, so no connected-components job
+    runs per batch.
+
     Arriving docs enter with identity labels via an ANTI-join against
     the state, so an at-least-once replay of a committed batch
     re-merges the same edges into the same labels (idempotent)
-    instead of duplicating vertices.  Creates the label table empty
-    on first use; commits the merged labels back when done."""
+    instead of duplicating vertices.  Creates the label table on
+    first use; commits the merged labels back when done."""
+    edges = [
+        (r.doc_a, r.doc_b)
+        for r in pairs.filter(F.col("n_match") >= MH_DUP_NM)
+        .select("doc_a", "doc_b")
+        .collect()
+    ]
     had_state = spark.catalog.tableExists(label_table)
+    known = {}
     if had_state:
         state = spark.table(label_table)
         arriving = (
@@ -188,7 +235,14 @@ def fold_edges_into_labels(
             .join(state.select("doc_id"), "doc_id", "left_anti")
             .select("doc_id", F.col("doc_id").alias("label"))
         )
-        labels0 = state.union(arriving)
+        labels = state.union(arriving)
+        ends = sorted({d for e in edges for d in e})
+        if ends:
+            known = dict(
+                state.filter(F.col("doc_id").isin(ends))
+                .select("doc_id", "label")
+                .collect()
+            )
     else:
         # first batch (r14): no empty-table bootstrap commit — the
         # state IS the arriving identity labels, and the final commit
@@ -196,19 +250,29 @@ def fold_edges_into_labels(
         # table write per stream; the replay-idempotence contract
         # is untouched (a replayed FIRST batch still anti-joins
         # against the by-then-existing table on the branch above).
-        labels0 = arriving_docs.select(
+        labels = arriving_docs.select(
             "doc_id", F.col("doc_id").alias("label")
         )
-    new_edges = (
-        pairs.filter(F.col("n_match") >= MH_DUP_NM).select("doc_a", "doc_b")
-    )
-    merged = merge_labels(labels0, new_edges, labels0.select("doc_id"))
-    # first batch: the merged plan reads only the batch frame, the
-    # pairs barrier and the CC loop's checkpoints — never the (not
-    # yet existing) label table — so the pre-commit barrier is one
-    # job the overwrite hazard does not need (r14)
+    remap = sorted(relabel_map(edges, known).items())
+    if remap:
+        # JVM literals, not a driver-built DataFrame: a frame made from
+        # a Python list runs pickled-RDD Python workers per batch
+        t = ArrayType(labels.schema["label"].dataType)
+        new = F.element_at(
+            F.map_from_arrays(
+                F.lit([k for k, _ in remap]).cast(t),
+                F.lit([v for _, v in remap]).cast(t),
+            ),
+            F.col("label"),
+        )
+        labels = labels.select(
+            "doc_id", F.coalesce(new, F.col("label")).alias("label")
+        )
+    # first batch: the plan reads only the batch frame and literals —
+    # never the (not yet existing) label table — so the pre-commit
+    # barrier is one job the overwrite hazard does not need (r14)
     commit_label_state(
-        spark, merged, label_table, label_path, barrier=had_state
+        spark, labels, label_table, label_path, barrier=had_state
     )
 
 
@@ -234,9 +298,10 @@ def ingest_docs_batch(
        surfaces exactly once across batches;
     3. pairs at >= ``MH_DUP_NM`` agreeing signature rows become edges
        and ``fold_edges_into_labels`` merges them into the label
-       state (``merge_labels``: CC over star forest ∪ new edges — the
-       dup subgraph; batch docs enter with identity labels via an
-       anti-join, so replaying a committed batch is idempotent);
+       state (a driver-side union-find over the edges' component
+       labels, applied to the state as a literal relabel map; batch
+       docs enter with identity labels via an anti-join, so
+       replaying a committed batch is idempotent);
     4. the merged labels are COMMITTED back over the label state.
 
     Returns the committed label frame.  After any prefix of batches
@@ -246,13 +311,13 @@ def ingest_docs_batch(
     test_committed_ingest_cycle_matches_from_scratch``).
 
     Once the commit lands, every barrier this cycle materialized
-    (batch signatures/bands, the CC loop's internal frames, the
-    pre-commit label checkpoint) is consumed — they are unpersisted
-    before returning so block-manager state stays bounded over an
-    unbounded batch loop (the same sweep, and the same
-    exclusive-session assumption, as ``stream_minhash_ingest``; a
-    caller running concurrent barrier-creating queries passes
-    ``release_batch_barriers=False`` and manages blocks itself)."""
+    (batch band rows, the pre-commit label checkpoint) is consumed —
+    they are unpersisted before returning so block-manager state
+    stays bounded over an unbounded batch loop (the same sweep, and
+    the same exclusive-session assumption, as
+    ``stream_minhash_ingest``; a caller running concurrent
+    barrier-creating queries passes ``release_batch_barriers=False``
+    and manages blocks itself)."""
     sc = spark.sparkContext
     live_before = set(persistent_rdds(sc)) if release_batch_barriers else ()
     # one barrier per batch (r14): sign → filter → band-explode →

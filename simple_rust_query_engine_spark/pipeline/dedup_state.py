@@ -371,11 +371,14 @@ def connected_components(
 def merge_labels(
     labels: DataFrame, new_edges: DataFrame, vertices: DataFrame
 ) -> DataFrame:
-    """Incremental connected components: fold NEW near-dup edges into
-    EXISTING component labels without recomputing CC over the corpus
-    — the label-maintenance step of continuous ingest (band-index
-    probe emits the new edges; this merges them; ``keep_best``
-    re-ranks only the touched components downstream).
+    """Incremental connected components as a lazy frame: fold NEW
+    near-dup edges into EXISTING component labels without recomputing
+    CC over the corpus.  It serves the batch rows that build a merged
+    label frame per query (``dedup_cc_incr``,
+    ``pipeline_incr_stateful``; ``keep_best`` re-ranks only the
+    touched components downstream).  The ingest loops do not call
+    it: their fold (``dedup_ingest.fold_edges_into_labels``) runs a
+    driver-side union-find over a batch's few edges instead.
 
     Existing labels are connectivity-equivalent to the old edge set
     as a star forest (doc → label), so CC over (star ∪ new_edges)

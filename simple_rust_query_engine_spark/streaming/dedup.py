@@ -326,9 +326,10 @@ def stream_minhash_ingest(
 
     Pass ``label_table``/``label_path`` to ALSO maintain component
     labels continuously: after each batch's pairs land, the thresholded
-    new edges are folded into the persisted label state
-    (``merge_labels`` over the dup-subgraph star forest ∪ new edges)
-    and the merged labels committed back — the streaming twin of
+    new edges are folded into the persisted label state (a
+    driver-side union-find over the edges' component labels, applied
+    as a literal relabel map — ``fold_edges_into_labels``) and the
+    merged labels committed back — the streaming twin of
     ``pipeline.dedup.ingest_docs_batch``.  Batch docs enter with
     identity labels via an ANTI-join against the state, so an
     at-least-once replay of a committed batch re-merges the same
@@ -452,9 +453,10 @@ def q_dedup_labels_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingested through ``stream_minhash_ingest`` with
     ``label_table`` set, so every micro-batch appends its bands,
     probes, and folds the thresholded edges into the persisted label
-    state (``merge_labels`` + commit).  The committed state after the
-    stream drains must equal from-scratch minhash-edged CC over the
-    corpus — the oracle IS that recursive CTE
+    state (``fold_edges_into_labels``: union-find relabel + commit).
+    The committed state after the stream drains must equal
+    from-scratch minhash-edged CC over the corpus — the oracle IS
+    that recursive CTE
     (``pipeline.dedup.mh_cc_labels_oracle``); the multi-batch
     chronological-replay path is pinned by
     ``tests/test_streaming_multibatch.py``."""

@@ -96,7 +96,7 @@ def test_committed_ingest_cycle_matches_from_scratch(
     spark, tables, tmp_path_factory
 ):
     # the FULL committed loop, three arriving batches: band append ->
-    # broadcast probe -> merge_labels -> commit label state.  After
+    # broadcast probe -> union-find relabel -> commit label state.  After
     # every batch the persisted label state must equal from-scratch
     # CC over the same-threshold LSH edges of the documents seen so
     # far — the invariant that makes incremental ingest trustworthy

@@ -343,6 +343,104 @@ def test_merge_labels_bridges_old_components(spark):
     assert got == {1: 1, 2: 1, 5: 1, 6: 1, 3: 3, 7: 7, 9: 7}
 
 
+def _fold_batch(spark, arriving, pairs):
+    # (arriving docs, probe pairs) frames; a pair's flag says whether it
+    # clears the edge threshold
+    from simple_rust_query_engine_spark.pipeline.dedup import MH_DUP_NM
+
+    return (
+        spark.createDataFrame([(d,) for d in arriving], "doc_id long"),
+        spark.createDataFrame(
+            [(a, b, MH_DUP_NM if keep else MH_DUP_NM - 1) for a, b, keep in pairs],
+            "doc_a long, doc_b long, n_match int",
+        ),
+    )
+
+
+def _fold(spark, arriving, pairs, table, path):
+    from simple_rust_query_engine_spark.pipeline.dedup import fold_edges_into_labels
+
+    fold_edges_into_labels(spark, *_fold_batch(spark, arriving, pairs), table, path)
+    return sorted(map(tuple, spark.table(table).collect()))
+
+
+def test_fold_bridges_components_and_replay_is_idempotent(spark, tmp_path):
+    # the ingest fold over committed state: a batch edge BRIDGES two
+    # components an earlier batch built, another attaches an arriving
+    # doc, a below-threshold pair is no edge, and untouched docs keep
+    # their labels; replaying the batch changes nothing
+    path = str(tmp_path / "labels")
+    try:
+        first = _fold(spark, [1, 2, 5, 6, 3, 7],
+                      [(1, 2, True), (5, 6, True)], "t_fold_bridge", path)
+        assert first == [(1, 1), (2, 1), (3, 3), (5, 5), (6, 5), (7, 7)]
+        batch = ([9], [(2, 5, True), (7, 9, True), (3, 7, False)])
+        want = [(1, 1), (2, 1), (3, 3), (5, 1), (6, 1), (7, 7), (9, 7)]
+        assert _fold(spark, *batch, "t_fold_bridge", path) == want
+        assert _fold(spark, *batch, "t_fold_bridge", path) == want
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_fold_bridge")
+
+
+def test_fold_matches_merge_labels_with_index_only_endpoint(spark, tmp_path):
+    # an edge endpoint neither held nor arriving (a doc only the band
+    # index has seen) keeps its own id, as in merge_labels' CC over
+    # (star forest ∪ edges): here it is the bridged component's
+    # minimum, so it becomes the label without becoming a row
+    from simple_rust_query_engine_spark.pipeline.dedup import merge_labels
+
+    path = str(tmp_path / "labels")
+    try:
+        _fold(spark, [4, 6, 8, 9], [(4, 6, True)], "t_fold_ghost", path)
+        before = spark.createDataFrame(
+            [(4, 4), (6, 4), (8, 8), (9, 9), (10, 10)], "doc_id long, label long"
+        )
+        edges = spark.createDataFrame(
+            [(0, 6), (0, 8), (9, 10)], "doc_a long, doc_b long"
+        )
+        want = sorted(
+            map(tuple, merge_labels(before, edges, before.select("doc_id")).collect())
+        )
+        got = _fold(spark, [10], [(0, 6, True), (0, 8, True), (9, 10, True)],
+                    "t_fold_ghost", path)
+        assert got == want == [(4, 0), (6, 0), (8, 0), (9, 9), (10, 9)]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_fold_ghost")
+
+
+def test_fold_runs_at_most_two_jobs_before_commit(spark, tmp_path, monkeypatch):
+    # with state held and an edge to fold, the fold reads the batch's
+    # edges and its endpoints' state labels — one job each — and
+    # hands the commit a lazy frame: no connected-components job runs
+    from simple_rust_query_engine_spark.pipeline import dedup_ingest
+
+    path = str(tmp_path / "labels")
+    try:
+        _fold(spark, [1, 2, 3, 4], [(1, 2, True)], "t_fold_jobs", path)
+        batch = _fold_batch(spark, [5], [(2, 3, True), (4, 5, True)])
+        handed = []
+        monkeypatch.setattr(
+            dedup_ingest, "commit_label_state",
+            lambda spark, labels, *a, **k: handed.append(labels),
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("fold_jobs", "fold one batch into held state")
+        try:
+            dedup_ingest.fold_edges_into_labels(
+                spark, *batch, "t_fold_jobs", path
+            )
+            jobs = list(sc.statusTracker().getJobIdsForGroup("fold_jobs"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(jobs) <= 2, jobs
+        (labels,) = handed
+        assert sorted(map(tuple, labels.collect())) == [
+            (1, 1), (2, 1), (3, 1), (4, 4), (5, 4)
+        ]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_fold_jobs")
+
+
 def test_temperature_mixture_upweights_small_sources(tables):
     # alpha=0.5 quotas: each source gets min(n, floor(target*sqrt(n)/
     # sum sqrt)) docs — smaller sources get a LARGER share than

@@ -738,3 +738,90 @@ def test_bloom_geometry_fp_rate_within_band(fp, seed):
         hit &= bitset[_bloom_bucket_sized(probe, i, m)]
     fp_rate = float(hit.mean())
     assert fp_rate <= 3.5 * fp + 2.0 / n, (m, d, fp_rate)
+
+
+def _components_min(vertices, edges) -> dict:
+    # reference connected components by graph search (not union-find):
+    # every vertex labelled with the minimum id reachable from it,
+    # through any node an edge names
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for v in vertices:
+        seen, todo = {v}, [v]
+        while todo:
+            for w in adj.get(todo.pop(), ()):
+                if w not in seen:
+                    seen.add(w)
+                    todo.append(w)
+        out[v] = min(seen)
+    return out
+
+
+def _fold_dicts(state: dict, arriving, edges) -> dict:
+    # fold_edges_into_labels on Python dicts: arriving docs enter with
+    # identity labels only if the state lacks them, the endpoints'
+    # state labels feed relabel_map, and the map relabels every row
+    from simple_rust_query_engine_spark.pipeline.dedup import relabel_map
+
+    labels = dict(state)
+    for d in arriving:
+        labels.setdefault(d, d)
+    known = {d: state[d] for e in edges for d in e if d in state}
+    remap = relabel_map(edges, known)
+    return {d: remap.get(lab, lab) for d, lab in labels.items()}
+
+
+def _batch_edges(data, nodes: list, ghosts: list):
+    # one batch's edges, in one of the shapes a fold must handle:
+    # random pairs, a chain, a star, or nothing
+    pool = nodes + ghosts
+    if len(pool) < 2:
+        return []
+    shape = data.draw(st.sampled_from(["random", "chain", "star", "none"]))
+    if shape == "none":
+        return []
+    if shape == "random":
+        pair = st.tuples(st.sampled_from(pool), st.sampled_from(pool))
+        return [e for e in data.draw(st.lists(pair, max_size=8)) if e[0] != e[1]]
+    members = data.draw(st.lists(st.sampled_from(pool), min_size=2, max_size=8,
+                                 unique=True))
+    if shape == "chain":
+        return list(zip(members, members[1:]))
+    return [(members[0], m) for m in members[1:]]
+
+
+@settings(max_examples=200, deadline=None)
+@given(data=st.data(), ghosts_allowed=st.booleans())
+def test_relabel_fold_matches_connected_components(data, ghosts_allowed):
+    # batch-by-batch folds of random edge batches — chains, stars,
+    # bridges between components earlier batches built, replays of an
+    # earlier batch, re-added edges and docs — give the labels
+    # connected components over (star forest ∪ batch edges) gives,
+    # batch for batch; with every endpoint a doc already seen (the
+    # ingest loops' case) they equal from-scratch CC over all edges.
+    # Ghosts are endpoints the state never holds (index-only docs):
+    # they keep their own id, and may be a component's minimum.
+    n = data.draw(st.integers(min_value=1, max_value=14))
+    order = data.draw(st.permutations(range(2, 2 * n + 2, 2)))
+    ghosts = [1, 2 * n + 3] if ghosts_allowed else []
+    cuts = sorted(data.draw(st.lists(st.integers(0, n), max_size=4)))
+    arrivals = [order[a:b] for a, b in zip([0] + cuts, cuts + [n])]
+    state: dict = {}
+    history, all_edges = [], []
+    for arriving in arrivals:
+        batches = [(arriving, _batch_edges(data, list(state) + arriving, ghosts))]
+        if history and data.draw(st.booleans()):
+            batches.append(data.draw(st.sampled_from(history)))  # replay
+        for arr, edges in batches:
+            star = [(d, lab) for d, lab in state.items() if d != lab]
+            vertices = set(state) | set(arr)
+            want = _components_min(vertices, star + edges)
+            state = _fold_dicts(state, arr, edges)
+            assert state == want, (arr, edges)
+            history.append((arr, edges))
+            all_edges += edges
+            if not ghosts_allowed:
+                assert state == _components_min(vertices, all_edges)
