@@ -79,6 +79,14 @@ def get_spark(app_name: str = "simple_rust_query_engine_spark") -> SparkSession:
         # files once its frame is garbage-collected so iterative
         # algorithms hold O(1) rounds of live disk
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # a file stream's source log compacts every 100 batches, not
+        # Spark's 10: compaction writes batch N's entry as `N.compact`
+        # (every file seen so far) instead of `N`, and the ingest
+        # benchmark counts each drain's files from the per-batch
+        # entries (perfbench `Ingest._new_batch_files`), so it would
+        # wait forever for batch 9's files.  A 20 s run lands at most
+        # 41 files (≤ 42 batches); restarts still read ≤ 99 entries
+        .config("spark.sql.streaming.fileSource.log.compactInterval", "100")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
