@@ -75,10 +75,14 @@ _CHANGED = (
     # the stream rows write their band index and label state as plain
     # (unbucketed) tables, and dedup_labels_stream folds each batch's
     # edges with a driver-side union-find; every row here sizes its
-    # k-NN probe or minhash docs side with session.size_to_input
+    # k-NN probe or minhash docs side with session.size_to_input;
+    # dedup_cc_incr and pipeline_incr_stateful fold their batch edges
+    # with the same union-find (pipeline.dedup.relabel)
     "dedup_minhash",
     "dedup_minhash_ingest_stream",
     "dedup_labels_stream",
+    "dedup_cc_incr",
+    "pipeline_incr_stateful",
     "dedup_minhash_bucketed",
     "dedup_minhash_incr",
     "dedup_text_auto",

@@ -119,15 +119,11 @@ from .dedup_state import (  # noqa: F401
     AUTO_ROUTE_MAX_CAND_PER_DOC,
     _edge_state_for,
     _label_state_for,
-    _large_star,
     _old_label_state_for,
     _read_docs,
-    _small_star,
     connected_components,
-    connected_components_star,
     cross_source_overlap,
     dedup_text_auto,
-    merge_labels,
     near_dup_edges,
     q_cross_source_overlap,
     q_dedup_cc,
@@ -137,6 +133,8 @@ from .dedup_state import (  # noqa: F401
     q_dup_cluster_sizes,
     q_ngram_jaccard,
     q_split_by_cluster,
+    relabel,
+    relabel_map,
     route_text_dedup,
 )
 from .dedup_spans import (  # noqa: F401
@@ -163,7 +161,6 @@ from .dedup_ingest import (  # noqa: F401
     q_decontaminate_fuzzy,
     q_dedup_keep_best,
     q_pipeline_incr_stateful,
-    relabel_map,
 )
 from .dedup_oracles import (  # noqa: F401
     ORACLE,

@@ -10,7 +10,6 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType
 
 from ..session import persistent_rdds
 from .dedup_core import _state_table, materialize
@@ -27,7 +26,7 @@ from .dedup_state import (
     _label_state_for,
     _read_docs,
     connected_components,
-    merge_labels,
+    relabel,
 )
 
 def keep_best(docs: DataFrame, labels: DataFrame) -> DataFrame:
@@ -160,36 +159,6 @@ def commit_label_state(
     spark.catalog.refreshTable(table)
 
 
-def relabel_map(edges, labels: dict) -> dict:
-    """Union-find over one batch's near-dup ``edges`` (doc id pairs)
-    on a star-forest label state: returns {old label → new label} for
-    every component label the batch changes.
-
-    ``labels`` maps doc id → label for the edge endpoints the state
-    holds; an endpoint it lacks (an arriving doc, or one only the
-    band index has seen) keeps its own id, as connected components
-    over (star forest ∪ edges) would give it.  Each label is the
-    minimum doc id of its component, so an edge can only merge whole
-    components, and the merged component's minimum is the smallest
-    of its labels: the smaller root wins every union.  Every key maps
-    straight to its final root, so one lookup applies the map."""
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while x != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in edges:
-        ra, rb = find(labels.get(a, a)), find(labels.get(b, b))
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {x: find(x) for x in list(parent)}
-
-
 def fold_edges_into_labels(
     spark,
     arriving_docs: DataFrame,
@@ -198,37 +167,25 @@ def fold_edges_into_labels(
     label_path: str,
 ) -> None:
     """Fold one batch's thresholded near-dup edges into the persisted
-    label state — the shared merge/commit tail of BOTH ingest loops
-    (``ingest_docs_batch`` and
-    ``streaming.dedup.stream_minhash_ingest``), kept in one place so
-    the replay hardening cannot drift between the copies.
+    label state and commit it — the merge/commit tail of
+    ``ingest_docs_batch``, the one ingest loop body.
 
     ``pairs`` is the batch's probe result (``doc_a, doc_b, n_match``);
-    rows at >= ``MH_DUP_NM`` agreeing signature rows become edges.
-    The fold runs on the driver, because a batch's edges are few: a
-    single batch holding the whole corpus has 25 of them at sf0.01,
-    256 at sf0.1 and 91 on the seeded sf1 corpus of
-    ``scripts/gen_sf1.py``, whose only near-dups are its injected
-    exact copies (banded-LSH pairs counted on DuckDB).  It collects
-    the edges, looks up the state labels of their endpoints with one
-    filtered scan, and runs ``relabel_map``; the map is applied to
-    every state row as a literal, so no connected-components job
-    runs per batch.
+    rows at >= ``MH_DUP_NM`` agreeing signature rows become edges,
+    which ``relabel`` folds in on the driver.  A single batch holding
+    the whole corpus has 25 such edges at sf0.01, 256 at sf0.1 and 91
+    on the seeded sf1 corpus of ``scripts/gen_sf1.py``, whose only
+    near-dups are its injected exact copies (banded-LSH pairs counted
+    on DuckDB).
 
     Arriving docs enter with identity labels via an ANTI-join against
     the state, so an at-least-once replay of a committed batch
     re-merges the same edges into the same labels (idempotent)
     instead of duplicating vertices.  Creates the label table on
     first use; commits the merged labels back when done."""
-    edges = [
-        (r.doc_a, r.doc_b)
-        for r in pairs.filter(F.col("n_match") >= MH_DUP_NM)
-        .select("doc_a", "doc_b")
-        .collect()
-    ]
-    had_state = spark.catalog.tableExists(label_table)
-    known = {}
-    if had_state:
+    edges = pairs.filter(F.col("n_match") >= MH_DUP_NM)
+    state = None
+    if spark.catalog.tableExists(label_table):
         state = spark.table(label_table)
         arriving = (
             arriving_docs.select("doc_id")
@@ -236,13 +193,6 @@ def fold_edges_into_labels(
             .select("doc_id", F.col("doc_id").alias("label"))
         )
         labels = state.union(arriving)
-        ends = sorted({d for e in edges for d in e})
-        if ends:
-            known = dict(
-                state.filter(F.col("doc_id").isin(ends))
-                .select("doc_id", "label")
-                .collect()
-            )
     else:
         # first batch (r14): no empty-table bootstrap commit — the
         # state IS the arriving identity labels, and the final commit
@@ -253,26 +203,12 @@ def fold_edges_into_labels(
         labels = arriving_docs.select(
             "doc_id", F.col("doc_id").alias("label")
         )
-    remap = sorted(relabel_map(edges, known).items())
-    if remap:
-        # JVM literals, not a driver-built DataFrame: a frame made from
-        # a Python list runs pickled-RDD Python workers per batch
-        t = ArrayType(labels.schema["label"].dataType)
-        new = F.element_at(
-            F.map_from_arrays(
-                F.lit([k for k, _ in remap]).cast(t),
-                F.lit([v for _, v in remap]).cast(t),
-            ),
-            F.col("label"),
-        )
-        labels = labels.select(
-            "doc_id", F.coalesce(new, F.col("label")).alias("label")
-        )
     # first batch: the plan reads only the batch frame and literals —
     # never the (not yet existing) label table — so the pre-commit
     # barrier is one job the overwrite hazard does not need (r14)
     commit_label_state(
-        spark, labels, label_table, label_path, barrier=had_state
+        spark, relabel(labels, edges, state), label_table, label_path,
+        barrier=state is not None,
     )
 
 
@@ -281,13 +217,16 @@ def ingest_docs_batch(
     batch_docs: DataFrame,
     index_table: str,
     index_path: str,
-    label_table: str,
-    label_path: str,
+    label_table: str | None = None,
+    label_path: str | None = None,
     release_batch_barriers: bool = True,
-) -> DataFrame:
-    """ONE full committed ingest cycle — the loop a continuous dedup
-    pipeline runs per arriving batch at 100 TB, every corpus-sized
-    input persisted state:
+    pairs_table: str | None = None,
+    pairs_path: str | None = None,
+) -> DataFrame | None:
+    """ONE full committed ingest cycle — the loop body both ingest
+    loops run per arriving batch (this batch API and
+    ``streaming.dedup.stream_minhash_ingest``'s ``foreachBatch``),
+    every corpus-sized input persisted state:
 
     1. band rows for the batch computed map-only (Arrow signature
        UDF over the BATCH only) and APPENDED to the index, a plain
@@ -296,28 +235,35 @@ def ingest_docs_batch(
        never shuffled) — because the append precedes the probe, the
        batch sees itself plus everything earlier, so each new pair
        surfaces exactly once across batches;
-    3. pairs at >= ``MH_DUP_NM`` agreeing signature rows become edges
-       and ``fold_edges_into_labels`` merges them into the label
-       state (a driver-side union-find over the edges' component
-       labels, applied to the state as a literal relabel map; batch
-       docs enter with identity labels via an anti-join, so
-       replaying a committed batch is idempotent);
-    4. the merged labels are COMMITTED back over the label state.
+    3. with ``pairs_table`` set, the batch's pairs APPENDED to it;
+    4. with ``label_table`` set, pairs at >= ``MH_DUP_NM`` agreeing
+       signature rows become edges and ``fold_edges_into_labels``
+       merges them into the label state (a driver-side union-find
+       over the edges' component labels, applied to the state as a
+       literal relabel map; batch docs enter with identity labels via
+       an anti-join, so replaying a committed batch is idempotent)
+       and COMMITS the merged labels back over it.
 
-    Returns the committed label frame.  After any prefix of batches
-    the label state equals from-scratch CC over the same-threshold
-    LSH edges of the documents seen so far
+    Returns the committed label frame (None without ``label_table``).
+    After any prefix of batches the label state equals from-scratch
+    CC over the same-threshold LSH edges of the documents seen so far
     (``tests/test_end_to_end_pipeline.py::
     test_committed_ingest_cycle_matches_from_scratch``).
 
-    Once the commit lands, every barrier this cycle materialized
-    (batch band rows, the pre-commit label checkpoint) is consumed —
-    they are unpersisted before returning so block-manager state
-    stays bounded over an unbounded batch loop (the same sweep, and
-    the same exclusive-session assumption, as
-    ``stream_minhash_ingest``; a caller running concurrent
-    barrier-creating queries passes ``release_batch_barriers=False``
-    and manages blocks itself)."""
+    Once the commits land, every barrier this cycle materialized
+    (batch band rows, the pinned pairs, the pre-commit label
+    checkpoint) is consumed — they are unpersisted before returning
+    so block-manager state stays bounded over an unbounded batch loop.
+    The sweep assumes the loop owns the session: it unpersists every
+    RDD persisted DURING the batch, which would race with a
+    concurrent query creating barriers in the same session.  A caller
+    running concurrent barrier-creating queries passes
+    ``release_batch_barriers=False`` and manages blocks itself."""
+    # the probe and the fold are looked up on the ``dedup`` facade at
+    # call time, where run-time wrappers (the benchmark's write-path
+    # spans) patch them
+    from . import dedup
+
     sc = spark.sparkContext
     live_before = set(persistent_rdds(sc)) if release_batch_barriers else ()
     # one barrier per batch (r14): sign → filter → band-explode →
@@ -327,16 +273,34 @@ def ingest_docs_batch(
     bands.write.mode("append").option("path", index_path).saveAsTable(
         index_table
     )
-    # a probe holding the cached relation would read the PRE-append
-    # file listing and miss every pair involving this batch
+    # refresh on THE PROBING SESSION: the append refreshes the
+    # writer's session, but a streaming batch frame is bound to an
+    # isolated micro-batch session clone — the outer session's cached
+    # file listing survives its refresh, and the probe would read the
+    # PRE-append index and silently miss every pair involving this
+    # batch (caught by the multi-batch test)
     spark.catalog.refreshTable(index_table)
-    pairs = probe_band_index(spark, index_table, new_bands=bands)
-    fold_edges_into_labels(spark, batch_docs, pairs, label_table, label_path)
+    pairs = dedup.probe_band_index(spark, index_table, new_bands=bands)
+    if pairs_table is not None:
+        if label_table is not None:
+            # the pair set is consumed twice (pairs append + label
+            # fold) — pin it so the broadcast probe against the
+            # corpus-sized index runs ONCE per batch, not per consumer
+            pairs = materialize(pairs)
+        w = pairs.write.mode("append")
+        if pairs_path is not None:
+            w = w.option("path", pairs_path)
+        w.saveAsTable(pairs_table)
+        spark.catalog.refreshTable(pairs_table)
+    if label_table is not None:
+        dedup.fold_edges_into_labels(
+            spark, batch_docs, pairs, label_table, label_path
+        )
     if release_batch_barriers:
         for rid, rdd in persistent_rdds(sc).items():
             if rid not in live_before:
                 rdd.unpersist(False)
-    return spark.table(label_table)
+    return None if label_table is None else spark.table(label_table)
 
 
 def q_pipeline_incr_stateful(spark, sf_dir: str) -> DataFrame:
@@ -348,9 +312,9 @@ def q_pipeline_incr_stateful(spark, sf_dir: str) -> DataFrame:
        band index; the corpus side is never shuffled.  Collisions
        with >= ``MH_DUP_NM`` agreeing signature rows (est Jaccard
        >= 0.5, integer compare) are the batch's near-dup edges.
-    2. MERGE — ``merge_labels`` folds those edges into the persisted
-       base label state: CC over (star forest ∪ new edges), the dup
-       subgraph only.
+    2. MERGE — ``relabel`` folds those edges into the persisted base
+       label state: a driver-side union-find over the edges'
+       component labels, applied to the state as a literal map.
     3. CANONICALIZE — ``keep_best`` re-ranks ONLY the touched
        components (those containing a batch doc): touched labels are
        a tiny distinct set, broadcast into the member filter, so the
@@ -367,12 +331,10 @@ def q_pipeline_incr_stateful(spark, sf_dir: str) -> DataFrame:
     idx = _band_index_for(spark, docs, key)
     labels0 = spark.table(_mh_old_label_state_for(spark, docs, key, idx))
     batch_bands = spark.table(idx).filter(F.col("doc_id") % INCR_MOD == 0)
-    new_edges = (
-        probe_band_index(spark, idx, new_bands=batch_bands)
-        .filter(F.col("n_match") >= MH_DUP_NM)
-        .select("doc_a", "doc_b")
+    new_edges = probe_band_index(spark, idx, new_bands=batch_bands).filter(
+        F.col("n_match") >= MH_DUP_NM
     )
-    merged = merge_labels(labels0, new_edges, docs.select("doc_id"))
+    merged = relabel(labels0, new_edges, labels0)
     touched = (
         merged.filter(F.col("doc_id") % INCR_MOD == 0)
         .select("label")

@@ -275,7 +275,8 @@ def stream_minhash_ingest(
     """Continuous LSH near-dup ingest THROUGH the streaming engine —
     the streaming twin of the persisted band index
     (``pipeline.dedup.build_band_index``): per micro-batch of
-    documents, ``foreachBatch``
+    documents, ``foreachBatch`` runs ``pipeline.dedup.ingest_docs_batch``,
+    the one ingest loop body, which
 
     1. computes the batch's band rows map-only (Arrow signature UDF
        over the BATCH only — paid exactly once per batch),
@@ -329,8 +330,7 @@ def stream_minhash_ingest(
     new edges are folded into the persisted label state (a
     driver-side union-find over the edges' component labels, applied
     as a literal relabel map — ``fold_edges_into_labels``) and the
-    merged labels committed back — the streaming twin of
-    ``pipeline.dedup.ingest_docs_batch``.  Batch docs enter with
+    merged labels committed back.  Batch docs enter with
     identity labels via an ANTI-join against the state, so an
     at-least-once replay of a committed batch re-merges the same
     edges into the same labels (idempotent) instead of duplicating
@@ -339,13 +339,7 @@ def stream_minhash_ingest(
     documents seen so far."""
     if label_table is not None and label_path is None:
         raise ValueError("stream_minhash_ingest: label_table needs label_path")
-    from ..pipeline.dedup import (
-        _checkpointed_bands,
-        fold_edges_into_labels,
-        materialize,
-        probe_band_index,
-    )
-    from ..session import persistent_rdds
+    from ..pipeline.dedup import ingest_docs_batch
     from .source import file_stream
 
     src = file_stream(
@@ -357,44 +351,17 @@ def stream_minhash_ingest(
     )
 
     def ingest(batch_df, batch_id):
-        sc = spark.sparkContext
-        live_before = set(persistent_rdds(sc)) if release_batch_barriers else ()
-        # one barrier per batch (r14): sign → filter → band-explode →
-        # checkpoint in a single job (see _checkpointed_bands)
-        bands = _checkpointed_bands(batch_df)
-        bands.write.mode("append").option("path", index_path).saveAsTable(
-            index_table
+        ingest_docs_batch(
+            spark,
+            batch_df,
+            index_table,
+            index_path,
+            label_table,
+            label_path,
+            release_batch_barriers=release_batch_barriers,
+            pairs_table=pairs_table,
+            pairs_path=pairs_path,
         )
-        # refresh on THE PROBING SESSION: the append refreshes the
-        # writer's session, but inside foreachBatch the batch frame is
-        # bound to an isolated micro-batch session clone — the outer
-        # session's cached file listing survives its refresh, and the
-        # probe would read the PRE-append index and silently miss
-        # every pair involving this batch (caught by the multi-batch
-        # test)
-        spark.catalog.refreshTable(index_table)
-        pairs = probe_band_index(spark, index_table, new_bands=bands)
-        if label_table is not None:
-            # the pair set is consumed twice (pairs append + label
-            # merge) — pin it so the broadcast probe against the
-            # corpus-sized index runs ONCE per batch, not per consumer
-            pairs = materialize(pairs)
-        w = pairs.write.mode("append")
-        if pairs_path is not None:
-            w = w.option("path", pairs_path)
-        w.saveAsTable(pairs_table)
-        spark.catalog.refreshTable(pairs_table)
-        if label_table is not None:
-            fold_edges_into_labels(
-                spark, batch_df, pairs, label_table, label_path
-            )
-        # this batch's barriers are consumed (both appends committed);
-        # release their blocks so state stays bounded across batches
-        # (exclusive-session mode only — see release_batch_barriers)
-        if release_batch_barriers:
-            for rid, rdd in persistent_rdds(sc).items():
-                if rid not in live_before:
-                    rdd.unpersist(False)
 
     writer = src.writeStream.foreachBatch(ingest).queryName(query_name)
     if checkpoint_location is not None:

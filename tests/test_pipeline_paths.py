@@ -321,12 +321,27 @@ def test_band_index_append_ingest_cycle(spark, tables, tmp_path):
         spark.sql("DROP TABLE IF EXISTS band_idx_cycle")
 
 
-def test_merge_labels_bridges_old_components(spark):
+def _cc_over_star_forest(spark, labels, edges):
+    # the reference for an incremental fold: from-scratch connected
+    # components over (star forest of the held labels ∪ new edges)
+    from simple_rust_query_engine_spark.pipeline.dedup import connected_components
+
+    star = labels.filter(F.col("label") != F.col("doc_id")).select(
+        F.col("doc_id").alias("doc_a"), F.col("label").alias("doc_b")
+    )
+    return sorted(
+        map(tuple, connected_components(
+            star.union(edges.select("doc_a", "doc_b")), labels.select("doc_id")
+        ).collect())
+    )
+
+
+def test_relabel_bridges_old_components(spark):
     # the case where incremental label maintenance must actually do
     # work: a new edge BRIDGES two existing components (their minima
     # must unify to the global min), another attaches a brand-new doc
     # pair, and untouched components keep their labels
-    from simple_rust_query_engine_spark.pipeline.dedup import merge_labels
+    from simple_rust_query_engine_spark.pipeline.dedup import relabel
 
     labels0 = spark.createDataFrame(
         [(1, 1), (2, 1), (5, 5), (6, 5), (3, 3), (7, 7), (9, 9)],
@@ -335,12 +350,28 @@ def test_merge_labels_bridges_old_components(spark):
     new_edges = spark.createDataFrame(
         [(2, 5), (7, 9)], "doc_a long, doc_b long"
     )
-    vertices = labels0.select("doc_id")
-    got = {
-        r.doc_id: r.label
-        for r in merge_labels(labels0, new_edges, vertices).collect()
-    }
-    assert got == {1: 1, 2: 1, 5: 1, 6: 1, 3: 3, 7: 7, 9: 7}
+    got = sorted(map(tuple, relabel(labels0, new_edges, labels0).collect()))
+    assert got == _cc_over_star_forest(spark, labels0, new_edges) == [
+        (1, 1), (2, 1), (3, 3), (5, 1), (6, 1), (7, 7), (9, 7)
+    ]
+
+
+def test_dedup_cc_incr_runs_at_most_two_jobs_from_held_state(spark):
+    # with the base label and pair states held, building dedup_cc_incr
+    # reads the batch's edges and its endpoints' labels — one job each
+    # — and returns a lazy relabel of the state: no connected-components
+    # job runs per call
+    from simple_rust_query_engine_spark.pipeline.dedup import q_dedup_cc_incr
+
+    q_dedup_cc_incr(spark, SF_DIR).count()
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_incr_jobs", "build dedup_cc_incr from held state")
+    try:
+        q_dedup_cc_incr(spark, SF_DIR)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("cc_incr_jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 2, jobs
 
 
 def _fold_batch(spark, arriving, pairs):
@@ -382,13 +413,11 @@ def test_fold_bridges_components_and_replay_is_idempotent(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_fold_bridge")
 
 
-def test_fold_matches_merge_labels_with_index_only_endpoint(spark, tmp_path):
+def test_fold_matches_cc_with_index_only_endpoint(spark, tmp_path):
     # an edge endpoint neither held nor arriving (a doc only the band
-    # index has seen) keeps its own id, as in merge_labels' CC over
-    # (star forest ∪ edges): here it is the bridged component's
-    # minimum, so it becomes the label without becoming a row
-    from simple_rust_query_engine_spark.pipeline.dedup import merge_labels
-
+    # index has seen) keeps its own id, as in CC over (star forest ∪
+    # edges): here it is the bridged component's minimum, so it
+    # becomes the label without becoming a row
     path = str(tmp_path / "labels")
     try:
         _fold(spark, [4, 6, 8, 9], [(4, 6, True)], "t_fold_ghost", path)
@@ -398,9 +427,7 @@ def test_fold_matches_merge_labels_with_index_only_endpoint(spark, tmp_path):
         edges = spark.createDataFrame(
             [(0, 6), (0, 8), (9, 10)], "doc_a long, doc_b long"
         )
-        want = sorted(
-            map(tuple, merge_labels(before, edges, before.select("doc_id")).collect())
-        )
+        want = _cc_over_star_forest(spark, before, edges)
         got = _fold(spark, [10], [(0, 6, True), (0, 8, True), (9, 10, True)],
                     "t_fold_ghost", path)
         assert got == want == [(4, 0), (6, 0), (8, 0), (9, 9), (10, 9)]
@@ -800,24 +827,6 @@ def test_strong_hash_paths(spark):
     assert s[5] == [None] * len(s[1])  # NULL semantics preserved
 
 
-def test_star_cc_chain_converges_logarithmically(spark):
-    # a 64-node chain is the propagation worst case (~63 rounds);
-    # large-star/small-star must land the same labels in O(log n)
-    from simple_rust_query_engine_spark.pipeline.dedup import (
-        connected_components_star,
-    )
-
-    n = 64
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
-    vertices = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    lab, rounds = connected_components_star(edges, vertices)
-    got = {r.doc_id: r.label for r in lab.collect()}
-    assert got == {i: 0 for i in range(n)}
-    assert rounds <= 12, rounds  # paper bound ~2 log n; propagation needs ~63
-
-
 def test_ngram_candidate_aggregation_matches_row_filtered_distinct(tables):
     # r14: the candidate stage aggregates per pair (map-side combined)
     # instead of filtering each matched row and running a distinct —
@@ -880,26 +889,6 @@ def test_ppjoin_candidate_estimate_bounds_actual(tables):
     actual = cand.count()
     assert bound >= actual
     assert bound > 0
-
-
-def test_star_cc_matches_propagation_on_neardup_graph(tables, spark):
-    from simple_rust_query_engine_spark.pipeline.dedup import (
-        connected_components,
-        q_ngram_jaccard,
-    )
-
-    t = tables
-    edges = q_ngram_jaccard(t).select("doc_a", "doc_b")
-    verts = t["documents"].select("doc_id")
-    prop = {
-        r.doc_id: r.label
-        for r in connected_components(edges, verts).collect()
-    }
-    star = {
-        r.doc_id: r.label
-        for r in connected_components(edges, verts, algorithm="star").collect()
-    }
-    assert prop == star and len(prop) > 0
 
 
 def test_lsh_bucket_udf_matches_expression(tables):
